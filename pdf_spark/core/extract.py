@@ -1,6 +1,6 @@
 """Per-document extraction: bytes -> spans -> deterministic text.
 
-This is the pure function the Spark ``mapInPandas`` stage applies per row
+This is the pure function the Spark ``mapInArrow`` stage applies per row
 (SURVEY.md §3 EP1: everything from ``pdf_resolver_new`` through the content
 interpreter stays inside the UDF; only flat span/text columns cross the
 Arrow boundary).

@@ -44,6 +44,7 @@ Number = Union[int, float]
 
 _MAX_PS_STEPS = 100_000  # runaway-program guard (spec programs are tiny)
 _MAX_PS_STACK = 100      # PLRM operand-stack limit, mirrored for safety
+_MAX_INT_BITS = 64       # calculator integer width bound (bitshift, add/sub/mul)
 
 
 class PSProgram:
@@ -161,6 +162,24 @@ def _bool_or_int2(stack: List[Any]) -> tuple:
         raise PdfError(INCORRECT_TYPE, "and/or/xor need two bools or two ints")
     return a, b
 
+def _bounded(v: Number) -> Number:
+    """Calculator integers stay within 64 bits (a ``dup mul`` loop must not
+    grow a big int without bound)."""
+    if isinstance(v, int) and v.bit_length() > _MAX_INT_BITS:
+        raise PdfError(INCORRECT_TYPE, "calculator integer overflow")
+    return v
+
+def _pow(a: Number, b: Number) -> float:
+    """Real ``a ** b``; a zero divide, overflow or complex result (negative
+    base, fractional exponent) is a malformed function."""
+    try:
+        r = float(a) ** float(b)
+    except ArithmeticError as exc:
+        raise PdfError(INCORRECT_TYPE, f"pow domain: {exc}") from None
+    if isinstance(r, complex):
+        raise PdfError(INCORRECT_TYPE, "pow of negative base")
+    return r
+
 def _ps_round(x: Number) -> Number:
     # PLRM round: nearest integer; ties go to the GREATER value.
     if isinstance(x, int):
@@ -246,13 +265,13 @@ def eval_calculator(prog: PSProgram, inputs: Sequence[Number]) -> List[Any]:
             # -- arithmetic --------------------------------------------------
             elif op == "add":
                 a, b = _num2(stack)
-                stack.append(a + b)
+                stack.append(_bounded(a + b))
             elif op == "sub":
                 a, b = _num2(stack)
-                stack.append(a - b)
+                stack.append(_bounded(a - b))
             elif op == "mul":
                 a, b = _num2(stack)
-                stack.append(a * b)
+                stack.append(_bounded(a * b))
             elif op == "div":
                 a, b = _num2(stack)
                 if b == 0:
@@ -304,7 +323,7 @@ def eval_calculator(prog: PSProgram, inputs: Sequence[Number]) -> List[Any]:
                 stack.append(deg)
             elif op == "exp":
                 a, b = _num2(stack)
-                stack.append(float(a) ** float(b))
+                stack.append(_pow(a, b))
             elif op == "ln":
                 a = _num1(stack)
                 if a <= 0:
@@ -363,7 +382,11 @@ def eval_calculator(prog: PSProgram, inputs: Sequence[Number]) -> List[Any]:
             elif op == "bitshift":
                 shift = _int1(stack)
                 a = _int1(stack)
-                stack.append(a << shift if shift >= 0 else a >> (-shift))
+                if abs(shift) > _MAX_INT_BITS:
+                    raise PdfError(INCORRECT_TYPE, "bitshift out of range")
+                stack.append(
+                    _bounded(a << shift) if shift >= 0 else a >> (-shift)
+                )
             elif op == "true":
                 stack.append(True)
             elif op == "false":
@@ -585,7 +608,7 @@ def eval_function(fn: PdfFunction, inputs: Sequence[Number]) -> List[Number]:
         m = fn.n_outputs or 1
         if fn.range is not None and len(fn.range) != 2 * m:
             raise PdfError(INCORRECT_TYPE, "Range length")
-        xn = x ** fn.n
+        xn = _pow(x, fn.n)
         out: List[Number] = []
         for j in range(m):
             c0 = fn.c0[j] if fn.c0 is not None else 0.0

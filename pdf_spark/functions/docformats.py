@@ -2,7 +2,7 @@
 text extraction — the non-PDF, non-HTML half of a crawl's document tier.
 
 Same contract as every other functions module: deterministic fixtures
-synthesized per ``doc_id`` INSIDE the mapInPandas batch (honest writers
+synthesized per ``doc_id`` INSIDE the ``map_records`` UDF (honest writers
 — stdlib ``zipfile`` builds real containers; the readers under test in
 ``core/`` share no code with them), outputs reproducible by a DuckDB
 oracle as pure ``doc_id`` arithmetic, zero per-row Python at the Spark
@@ -17,7 +17,6 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     IntegerType,
@@ -28,6 +27,7 @@ from pyspark.sql.types import (
 )
 
 from pdf_spark.functions.tables import load
+from pdf_spark.operators.extract import map_records
 
 QUERIES = {}
 ORACLE = {}
@@ -83,38 +83,15 @@ def _qm37_make_zip(doc_id: int) -> bytes:
 def _qm37(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.zipread import zip_inventory
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            invs = [zip_inventory(_qm37_make_zip(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_zip": [v["is_zip"] for v in invs],
-                    "n_entries": pd.array(
-                        [v["n_entries"] for v in invs], dtype="Int64"
-                    ),
-                    "n_dirs": pd.array(
-                        [v["n_dirs"] for v in invs], dtype="Int64"
-                    ),
-                    "total_uncomp": pd.array(
-                        [v["total_uncomp"] for v in invs], dtype="Int64"
-                    ),
-                    "n_deflated": pd.array(
-                        [v["n_deflated"] for v in invs], dtype="Int64"
-                    ),
-                    "has_encrypted": pd.array(
-                        [v["has_encrypted"] for v in invs], dtype="Int32"
-                    ),
-                    "bomb_suspect": pd.array(
-                        [v["bomb_suspect"] for v in invs], dtype="Int32"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **zip_inventory(_qm37_make_zip(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _ZIP_INV_SCHEMA)
+    return map_records(docs, run, _ZIP_INV_SCHEMA)
 
 
 QUERIES["qm37_zip_inventory"] = _qm37
@@ -204,28 +181,15 @@ def _qx43_make_docx(doc_id: int) -> bytes:
 def _qx43(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.docx import docx_text
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [docx_text(_qx43_make_docx(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_docx": [m["is_docx"] for m in metas],
-                    "text": [m["text"] for m in metas],
-                    "n_paragraphs": pd.array(
-                        [m["n_paragraphs"] for m in metas], dtype="Int64"
-                    ),
-                    "n_tables": pd.array(
-                        [m["n_tables"] for m in metas], dtype="Int64"
-                    ),
-                    "title": [m["title"] for m in metas],
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **docx_text(_qx43_make_docx(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _DOCX_SCHEMA)
+    return map_records(docs, run, _DOCX_SCHEMA)
 
 
 QUERIES["qx43_docx_text"] = _qx43
@@ -307,26 +271,15 @@ def _qx44_make_epub(doc_id: int) -> bytes:
 def _qx44(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.epub import epub_text
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [epub_text(_qx44_make_epub(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_epub": [m["is_epub"] for m in metas],
-                    "title": [m["title"] for m in metas],
-                    "language": [m["language"] for m in metas],
-                    "n_chapters": pd.array(
-                        [m["n_chapters"] for m in metas], dtype="Int64"
-                    ),
-                    "text": [m["text"] for m in metas],
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **epub_text(_qx44_make_epub(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _EPUB_SCHEMA)
+    return map_records(docs, run, _EPUB_SCHEMA)
 
 
 QUERIES["qx44_epub_text"] = _qx44
@@ -403,27 +356,12 @@ def _qx45_make_eml(doc_id: int) -> bytes:
 def _qx45(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.eml import eml_text
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [eml_text(_qx45_make_eml(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_email": [m["is_email"] for m in metas],
-                    "subject": [m["subject"] for m in metas],
-                    "from_domain": [m["from_domain"] for m in metas],
-                    "n_parts": pd.array(
-                        [m["n_parts"] for m in metas], dtype="Int64"
-                    ),
-                    "body_kind": [m["body_kind"] for m in metas],
-                    "body_text": [m["body_text"] for m in metas],
-                }
-            )
+        yield {"doc_id": r["doc_id"], **eml_text(_qx45_make_eml(r["doc_id"]))}
 
-    return docs.mapInPandas(run, _EML_SCHEMA)
+    return map_records(docs, run, _EML_SCHEMA)
 
 
 QUERIES["qx45_eml_text"] = _qx45
@@ -468,24 +406,12 @@ def _qx46_make_rtf(doc_id: int) -> bytes:
 def _qx46(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.rtf import rtf_text
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [rtf_text(_qx46_make_rtf(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_rtf": [m["is_rtf"] for m in metas],
-                    "text": [m["text"] for m in metas],
-                    "n_pars": pd.array(
-                        [m["n_pars"] for m in metas], dtype="Int64"
-                    ),
-                }
-            )
+        yield {"doc_id": r["doc_id"], **rtf_text(_qx46_make_rtf(r["doc_id"]))}
 
-    return docs.mapInPandas(run, _RTF_SCHEMA)
+    return map_records(docs, run, _RTF_SCHEMA)
 
 
 QUERIES["qx46_rtf_text"] = _qx46
@@ -608,34 +534,15 @@ def _qm38_make_font(doc_id: int) -> bytes:
 def _qm38(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.fontmeta import font_meta
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [font_meta(_qm38_make_font(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_font": [m["is_font"] for m in metas],
-                    "is_woff": pd.array(
-                        [m["is_woff"] for m in metas], dtype="Int32"
-                    ),
-                    "is_cff": pd.array(
-                        [m["is_cff"] for m in metas], dtype="Int32"
-                    ),
-                    "family": [m["family"] for m in metas],
-                    "subfamily": [m["subfamily"] for m in metas],
-                    "n_glyphs": pd.array(
-                        [m["n_glyphs"] for m in metas], dtype="Int64"
-                    ),
-                    "units_per_em": pd.array(
-                        [m["units_per_em"] for m in metas], dtype="Int64"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **font_meta(_qm38_make_font(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _FONT_SCHEMA)
+    return map_records(docs, run, _FONT_SCHEMA)
 
 
 QUERIES["qm38_font_meta"] = _qm38
@@ -711,28 +618,12 @@ def _qx47_make_odt(doc_id: int) -> bytes:
 def _qx47(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.odt import odt_text
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [odt_text(_qx47_make_odt(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_odt": [m["is_odt"] for m in metas],
-                    "text": [m["text"] for m in metas],
-                    "n_paragraphs": pd.array(
-                        [m["n_paragraphs"] for m in metas], dtype="Int64"
-                    ),
-                    "n_headings": pd.array(
-                        [m["n_headings"] for m in metas], dtype="Int64"
-                    ),
-                    "title": [m["title"] for m in metas],
-                }
-            )
+        yield {"doc_id": r["doc_id"], **odt_text(_qx47_make_odt(r["doc_id"]))}
 
-    return docs.mapInPandas(run, _ODT_SCHEMA)
+    return map_records(docs, run, _ODT_SCHEMA)
 
 
 QUERIES["qx47_odt_text"] = _qx47
@@ -780,34 +671,15 @@ def _qx48_make_md(doc_id: int) -> str:
 def _qx48(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.mdsrc import md_structure
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [md_structure(_qx48_make_md(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "title": [m["title"] for m in metas],
-                    "n_headings": pd.array(
-                        [m["n_headings"] for m in metas], dtype="Int64"
-                    ),
-                    "n_code_blocks": pd.array(
-                        [m["n_code_blocks"] for m in metas], dtype="Int64"
-                    ),
-                    "code_lang": [m["code_lang"] for m in metas],
-                    "n_links": pd.array(
-                        [m["n_links"] for m in metas], dtype="Int64"
-                    ),
-                    "n_images": pd.array(
-                        [m["n_images"] for m in metas], dtype="Int64"
-                    ),
-                    "prose": [m["prose"] for m in metas],
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **md_structure(_qx48_make_md(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _MD_SCHEMA)
+    return map_records(docs, run, _MD_SCHEMA)
 
 
 QUERIES["qx48_markdown_source"] = _qx48
@@ -866,33 +738,15 @@ def _qx49_make_tex(doc_id: int) -> str:
 def _qx49(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.latex import latex_text
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [latex_text(_qx49_make_tex(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "title": [m["title"] for m in metas],
-                    "n_sections": pd.array(
-                        [m["n_sections"] for m in metas], dtype="Int64"
-                    ),
-                    "n_equations": pd.array(
-                        [m["n_equations"] for m in metas], dtype="Int64"
-                    ),
-                    "n_inline_math": pd.array(
-                        [m["n_inline_math"] for m in metas], dtype="Int64"
-                    ),
-                    "n_citations": pd.array(
-                        [m["n_citations"] for m in metas], dtype="Int64"
-                    ),
-                    "text": [m["text"] for m in metas],
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **latex_text(_qx49_make_tex(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _TEX_SCHEMA)
+    return map_records(docs, run, _TEX_SCHEMA)
 
 
 QUERIES["qx49_latex_source"] = _qx49
@@ -956,32 +810,15 @@ def _qm39_make_tar(doc_id: int) -> bytes:
 def _qm39(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.tarread import tar_inventory
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            invs = [tar_inventory(_qm39_make_tar(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_tar": [v["is_tar"] for v in invs],
-                    "is_gzipped": pd.array(
-                        [v["is_gzipped"] for v in invs], dtype="Int32"
-                    ),
-                    "n_files": pd.array(
-                        [v["n_files"] for v in invs], dtype="Int64"
-                    ),
-                    "n_dirs": pd.array(
-                        [v["n_dirs"] for v in invs], dtype="Int64"
-                    ),
-                    "total_size": pd.array(
-                        [v["total_size"] for v in invs], dtype="Int64"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **tar_inventory(_qm39_make_tar(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _TAR_SCHEMA)
+    return map_records(docs, run, _TAR_SCHEMA)
 
 
 QUERIES["qm39_tar_inventory"] = _qm39
@@ -1025,31 +862,15 @@ def _qx50_make_csv(doc_id: int) -> bytes:
 def _qx50(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.csvsniff import sniff_table
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [sniff_table(_qx50_make_csv(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_tabular": [m["is_tabular"] for m in metas],
-                    "delimiter": [m["delimiter"] for m in metas],
-                    "n_rows": pd.array(
-                        [m["n_rows"] for m in metas], dtype="Int64"
-                    ),
-                    "n_cols": pd.array(
-                        [m["n_cols"] for m in metas], dtype="Int64"
-                    ),
-                    "has_header": pd.array(
-                        [m["has_header"] for m in metas], dtype="Int32"
-                    ),
-                    "cells_md5": [m["cells_md5"] for m in metas],
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **sniff_table(_qx50_make_csv(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _CSV_SCHEMA)
+    return map_records(docs, run, _CSV_SCHEMA)
 
 
 QUERIES["qx50_csv_sniff"] = _qx50
@@ -1104,35 +925,12 @@ def _qm40_make_ico(doc_id: int) -> bytes:
 def _qm40(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.imaging import ico_meta
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [ico_meta(_qm40_make_ico(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_ico": [m["is_ico"] for m in metas],
-                    "is_cursor": pd.array(
-                        [m["is_cursor"] for m in metas], dtype="Int32"
-                    ),
-                    "n_images": pd.array(
-                        [m["n_images"] for m in metas], dtype="Int64"
-                    ),
-                    "max_width": pd.array(
-                        [m["max_width"] for m in metas], dtype="Int64"
-                    ),
-                    "max_height": pd.array(
-                        [m["max_height"] for m in metas], dtype="Int64"
-                    ),
-                    "has_png_frame": pd.array(
-                        [m["has_png_frame"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {"doc_id": r["doc_id"], **ico_meta(_qm40_make_ico(r["doc_id"]))}
 
-    return docs.mapInPandas(run, _ICO_SCHEMA)
+    return map_records(docs, run, _ICO_SCHEMA)
 
 
 QUERIES["qm40_favicon_meta"] = _qm40
@@ -1209,39 +1007,15 @@ def _qx51_make_http(doc_id: int) -> bytes:
 def _qx51(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.sources.warc import http_header_audit
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [http_header_audit(_qx51_make_http(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_http": [m["is_http"] for m in metas],
-                    "status": pd.array(
-                        [m["status"] for m in metas], dtype="Int64"
-                    ),
-                    "mime": [m["mime"] for m in metas],
-                    "charset": [m["charset"] for m in metas],
-                    "lang": [m["lang"] for m in metas],
-                    "max_age": pd.array(
-                        [m["max_age"] for m in metas], dtype="Int64"
-                    ),
-                    "noindex": pd.array(
-                        [m["noindex"] for m in metas], dtype="Int32"
-                    ),
-                    "location_host": [m["location_host"] for m in metas],
-                    "gzipped": pd.array(
-                        [m["gzipped"] for m in metas], dtype="Int32"
-                    ),
-                    "hsts": pd.array(
-                        [m["hsts"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **http_header_audit(_qx51_make_http(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _HTTP_SCHEMA)
+    return map_records(docs, run, _HTTP_SCHEMA)
 
 
 QUERIES["qx51_http_header_audit"] = _qx51
@@ -1328,31 +1102,15 @@ def _qx52_make_xlsx(doc_id: int) -> bytes:
 def _qx52(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.xlsx import xlsx_cells
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [xlsx_cells(_qx52_make_xlsx(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_xlsx": [m["is_xlsx"] for m in metas],
-                    "n_sheets": pd.array(
-                        [m["n_sheets"] for m in metas], dtype="Int64"
-                    ),
-                    "sheet_name": [m["sheet_name"] for m in metas],
-                    "n_rows": pd.array(
-                        [m["n_rows"] for m in metas], dtype="Int64"
-                    ),
-                    "n_cells": pd.array(
-                        [m["n_cells"] for m in metas], dtype="Int64"
-                    ),
-                    "cells_md5": [m["cells_md5"] for m in metas],
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **xlsx_cells(_qx52_make_xlsx(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _XLSX_SCHEMA)
+    return map_records(docs, run, _XLSX_SCHEMA)
 
 
 QUERIES["qx52_xlsx_cells"] = _qx52
@@ -1425,27 +1183,15 @@ def _qx53_make_pptx(doc_id: int) -> bytes:
 def _qx53(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.pptx import pptx_text
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [pptx_text(_qx53_make_pptx(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_pptx": [m["is_pptx"] for m in metas],
-                    "n_slides": pd.array(
-                        [m["n_slides"] for m in metas], dtype="Int64"
-                    ),
-                    "n_paragraphs": pd.array(
-                        [m["n_paragraphs"] for m in metas], dtype="Int64"
-                    ),
-                    "text": [m["text"] for m in metas],
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **pptx_text(_qx53_make_pptx(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _PPTX_SCHEMA)
+    return map_records(docs, run, _PPTX_SCHEMA)
 
 
 QUERIES["qx53_pptx_text"] = _qx53
@@ -1504,30 +1250,15 @@ def _qx54_make_ical(doc_id: int) -> bytes:
 def _qx54(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.ical import ical_events
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [ical_events(_qx54_make_ical(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_ical": [m["is_ical"] for m in metas],
-                    "n_events": pd.array(
-                        [m["n_events"] for m in metas], dtype="Int64"
-                    ),
-                    "first_summary": [m["first_summary"] for m in metas],
-                    "total_minutes": pd.array(
-                        [m["total_minutes"] for m in metas], dtype="Int64"
-                    ),
-                    "has_rrule": pd.array(
-                        [m["has_rrule"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **ical_events(_qx54_make_ical(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _ICAL_SCHEMA)
+    return map_records(docs, run, _ICAL_SCHEMA)
 
 
 QUERIES["qx54_ical_events"] = _qx54
@@ -1615,31 +1346,13 @@ def _qx55_profile(raw: str) -> dict:
 def _qx55(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [_qx55_profile(_qx55_make_json(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_json": [m["is_json"] for m in metas],
-                    "top_type": [m["top_type"] for m in metas],
-                    "max_depth": pd.array(
-                        [m["max_depth"] for m in metas], dtype="Int64"
-                    ),
-                    "n_keys": pd.array(
-                        [m["n_keys"] for m in metas], dtype="Int64"
-                    ),
-                    "n_arrays": pd.array(
-                        [m["n_arrays"] for m in metas], dtype="Int64"
-                    ),
-                    "n_nulls": pd.array(
-                        [m["n_nulls"] for m in metas], dtype="Int64"
-                    ),
-                }
-            )
+    def run(r: dict) -> Iterator[dict]:
+        yield {
+            "doc_id": r["doc_id"],
+            **_qx55_profile(_qx55_make_json(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _JSON_SCHEMA)
+    return map_records(docs, run, _JSON_SCHEMA)
 
 
 QUERIES["qx55_json_audit"] = _qx55
@@ -1692,34 +1405,15 @@ def _qt70_make_text(doc_id: int) -> str:
 def _qt70(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.scripts import script_mix
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [script_mix(_qt70_make_text(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_tokens": pd.array(
-                        [m["n_tokens"] for m in metas], dtype="Int64"
-                    ),
-                    "n_latin": pd.array(
-                        [m["n_latin"] for m in metas], dtype="Int64"
-                    ),
-                    "n_cyrillic": pd.array(
-                        [m["n_cyrillic"] for m in metas], dtype="Int64"
-                    ),
-                    "n_mixed": pd.array(
-                        [m["n_mixed"] for m in metas], dtype="Int64"
-                    ),
-                    "has_spoof": pd.array(
-                        [m["has_spoof"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **script_mix(_qt70_make_text(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _SCRIPT_SCHEMA)
+    return map_records(docs, run, _SCRIPT_SCHEMA)
 
 
 QUERIES["qt70_script_spoof"] = _qt70
@@ -1764,32 +1458,15 @@ def _qm41_make_png(doc_id: int) -> bytes:
 def _qm41(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.imaging import png_integrity
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [png_integrity(_qm41_make_png(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_png": [m["is_png"] for m in metas],
-                    "n_chunks": pd.array(
-                        [m["n_chunks"] for m in metas], dtype="Int64"
-                    ),
-                    "n_bad_crc": pd.array(
-                        [m["n_bad_crc"] for m in metas], dtype="Int64"
-                    ),
-                    "has_iend": pd.array(
-                        [m["has_iend"] for m in metas], dtype="Int32"
-                    ),
-                    "truncated": pd.array(
-                        [m["truncated"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **png_integrity(_qm41_make_png(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _PNGI_SCHEMA)
+    return map_records(docs, run, _PNGI_SCHEMA)
 
 
 QUERIES["qm41_png_integrity"] = _qm41
@@ -1831,29 +1508,15 @@ def _qx56_make_body(doc_id: int) -> str:
 def _qx56(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.eml import strip_reply
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [strip_reply(_qx56_make_body(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "clean_text": [m["clean_text"] for m in metas],
-                    "n_quoted_lines": pd.array(
-                        [m["n_quoted_lines"] for m in metas], dtype="Int64"
-                    ),
-                    "has_signature": pd.array(
-                        [m["has_signature"] for m in metas], dtype="Int32"
-                    ),
-                    "has_attribution": pd.array(
-                        [m["has_attribution"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **strip_reply(_qx56_make_body(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _REPLY_SCHEMA)
+    return map_records(docs, run, _REPLY_SCHEMA)
 
 
 QUERIES["qx56_reply_strip"] = _qx56
@@ -1902,35 +1565,15 @@ def _qx57_make_wiki(doc_id: int) -> str:
 def _qx57(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.wikitext import wikitext_strip
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [wikitext_strip(_qx57_make_wiki(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "text": [m["text"] for m in metas],
-                    "n_sections": pd.array(
-                        [m["n_sections"] for m in metas], dtype="Int64"
-                    ),
-                    "n_templates": pd.array(
-                        [m["n_templates"] for m in metas], dtype="Int64"
-                    ),
-                    "n_internal_links": pd.array(
-                        [m["n_internal_links"] for m in metas], dtype="Int64"
-                    ),
-                    "n_external_links": pd.array(
-                        [m["n_external_links"] for m in metas], dtype="Int64"
-                    ),
-                    "n_refs": pd.array(
-                        [m["n_refs"] for m in metas], dtype="Int64"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **wikitext_strip(_qx57_make_wiki(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _WIKI_SCHEMA)
+    return map_records(docs, run, _WIKI_SCHEMA)
 
 
 QUERIES["qx57_wikitext_strip"] = _qx57
@@ -2025,17 +1668,13 @@ def _qx58_make_blob(doc_id: int) -> bytes:
 def _qx58(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "kind": [route_document(_qx58_make_blob(d)) for d in ids],
-                }
-            )
+    def run(r: dict) -> Iterator[dict]:
+        yield {
+            "doc_id": r["doc_id"],
+            "kind": route_document(_qx58_make_blob(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _ROUTE_SCHEMA)
+    return map_records(docs, run, _ROUTE_SCHEMA)
 
 
 QUERIES["qx58_doc_router"] = _qx58
@@ -2084,30 +1723,15 @@ def _qx59_make_html(doc_id: int) -> str:
 def _qx59(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.tablegrid import table_grid
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [table_grid(_qx59_make_html(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "has_table": [m["has_table"] for m in metas],
-                    "n_rows": pd.array(
-                        [m["n_rows"] for m in metas], dtype="Int64"
-                    ),
-                    "n_cols": pd.array(
-                        [m["n_cols"] for m in metas], dtype="Int64"
-                    ),
-                    "n_spanned": pd.array(
-                        [m["n_spanned"] for m in metas], dtype="Int64"
-                    ),
-                    "grid_md5": [m["grid_md5"] for m in metas],
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **table_grid(_qx59_make_html(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _GRID_SCHEMA)
+    return map_records(docs, run, _GRID_SCHEMA)
 
 
 QUERIES["qx59_table_grid"] = _qx59
@@ -2161,35 +1785,15 @@ def _qm42_make_jpeg(doc_id: int) -> bytes:
 def _qm42(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.imaging import jpeg_integrity
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [jpeg_integrity(_qm42_make_jpeg(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_jpeg": [m["is_jpeg"] for m in metas],
-                    "n_segments": pd.array(
-                        [m["n_segments"] for m in metas], dtype="Int64"
-                    ),
-                    "has_eoi": pd.array(
-                        [m["has_eoi"] for m in metas], dtype="Int32"
-                    ),
-                    "truncated": pd.array(
-                        [m["truncated"] for m in metas], dtype="Int32"
-                    ),
-                    "has_exif": pd.array(
-                        [m["has_exif"] for m in metas], dtype="Int32"
-                    ),
-                    "has_icc": pd.array(
-                        [m["has_icc"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **jpeg_integrity(_qm42_make_jpeg(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _JPEGI_SCHEMA)
+    return map_records(docs, run, _JPEGI_SCHEMA)
 
 
 QUERIES["qm42_jpeg_integrity"] = _qm42
@@ -2244,34 +1848,15 @@ def _qx60_make_html(doc_id: int) -> bytes:
 def _qx60(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.htmlaudit import soft_redirects
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [soft_redirects(_qx60_make_html(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "has_meta_refresh": pd.array(
-                        [m["has_meta_refresh"] for m in metas], dtype="Int32"
-                    ),
-                    "refresh_delay": pd.array(
-                        [m["refresh_delay"] for m in metas], dtype="Int64"
-                    ),
-                    "refresh_target_host": [
-                        m["refresh_target_host"] for m in metas
-                    ],
-                    "has_js_redirect": pd.array(
-                        [m["has_js_redirect"] for m in metas], dtype="Int32"
-                    ),
-                    "is_doorway": pd.array(
-                        [m["is_doorway"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **soft_redirects(_qx60_make_html(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _REDIR_SCHEMA)
+    return map_records(docs, run, _REDIR_SCHEMA)
 
 
 QUERIES["qx60_soft_redirects"] = _qx60
@@ -2316,29 +1901,15 @@ def _qm43_make_png(doc_id: int) -> bytes:
 def _qm43(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.imaging import color_histogram
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [color_histogram(_qm43_make_png(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_image": [m["is_image"] for m in metas],
-                    "dominant_bucket": pd.array(
-                        [m["dominant_bucket"] for m in metas], dtype="Int64"
-                    ),
-                    "dominant_permille": pd.array(
-                        [m["dominant_permille"] for m in metas], dtype="Int64"
-                    ),
-                    "n_buckets": pd.array(
-                        [m["n_buckets"] for m in metas], dtype="Int64"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **color_histogram(_qm43_make_png(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _COLOR_SCHEMA)
+    return map_records(docs, run, _COLOR_SCHEMA)
 
 
 QUERIES["qm43_color_histogram"] = _qm43
@@ -2862,28 +2433,15 @@ def _qx61_make_page(doc_id: int) -> bytes:
 def _qx61(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.htmlaudit import charset_detect
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [charset_detect(_qx61_make_page(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "bom": [m["bom"] for m in metas],
-                    "declared": [m["declared"] for m in metas],
-                    "utf8_valid": pd.array(
-                        [m["utf8_valid"] for m in metas], dtype="Int32"
-                    ),
-                    "resolved": [m["resolved"] for m in metas],
-                    "mismatch": pd.array(
-                        [m["mismatch"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **charset_detect(_qx61_make_page(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _CHARSET_SCHEMA)
+    return map_records(docs, run, _CHARSET_SCHEMA)
 
 
 QUERIES["qx61_charset_detect"] = _qx61
@@ -2952,32 +2510,15 @@ def _qx62_make_page(doc_id: int) -> bytes:
 def _qx62(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.htmlaudit import hreflang_audit
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [hreflang_audit(_qx62_make_page(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "page_lang": [m["page_lang"] for m in metas],
-                    "n_alternates": pd.array(
-                        [m["n_alternates"] for m in metas], dtype="Int32"
-                    ),
-                    "n_langs": pd.array(
-                        [m["n_langs"] for m in metas], dtype="Int32"
-                    ),
-                    "has_xdefault": pd.array(
-                        [m["has_xdefault"] for m in metas], dtype="Int32"
-                    ),
-                    "is_multilingual": pd.array(
-                        [m["is_multilingual"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **hreflang_audit(_qx62_make_page(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _HREFLANG_SCHEMA)
+    return map_records(docs, run, _HREFLANG_SCHEMA)
 
 
 QUERIES["qx62_hreflang_audit"] = _qx62
@@ -3032,32 +2573,14 @@ def _qt76_make_text(doc_id: int) -> str:
 def _qt76(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.sentseg import sentence_split
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [sentence_split(_qt76_make_text(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_sentences": pd.array(
-                        [m["n_sentences"] for m in metas], dtype="Int32"
-                    ),
-                    "n_guards": pd.array(
-                        [m["n_guards"] for m in metas], dtype="Int32"
-                    ),
-                    "max_chars": pd.array(
-                        [m["max_chars"] for m in metas], dtype="Int64"
-                    ),
-                    "first_sentence": [
-                        m["sentences"][0] if m["sentences"] else None
-                        for m in metas
-                    ],
-                }
-            )
+        m = sentence_split(_qt76_make_text(r["doc_id"]))
+        first = m["sentences"][0] if m["sentences"] else None
+        yield {"doc_id": r["doc_id"], **m, "first_sentence": first}
 
-    return docs.mapInPandas(run, _SENTSEG_SCHEMA)
+    return map_records(docs, run, _SENTSEG_SCHEMA)
 
 
 QUERIES["qt76_sentence_split"] = _qt76
@@ -3137,38 +2660,15 @@ def _qm44_make_wasm(doc_id: int) -> bytes:
 def _qm44(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.wasm import wasm_audit
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [wasm_audit(_qm44_make_wasm(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_wasm": [m["is_wasm"] for m in metas],
-                    "version": pd.array(
-                        [m["version"] for m in metas], dtype="Int64"
-                    ),
-                    "n_sections": pd.array(
-                        [m["n_sections"] for m in metas], dtype="Int32"
-                    ),
-                    "has_code": pd.array(
-                        [m["has_code"] for m in metas], dtype="Int32"
-                    ),
-                    "has_export": pd.array(
-                        [m["has_export"] for m in metas], dtype="Int32"
-                    ),
-                    "n_custom": pd.array(
-                        [m["n_custom"] for m in metas], dtype="Int32"
-                    ),
-                    "truncated": pd.array(
-                        [m["truncated"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **wasm_audit(_qm44_make_wasm(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _WASM_SCHEMA)
+    return map_records(docs, run, _WASM_SCHEMA)
 
 
 QUERIES["qm44_wasm_audit"] = _qm44
@@ -3240,33 +2740,12 @@ def _qm45_make_ogg(doc_id: int) -> bytes:
 def _qm45(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.oggread import ogg_audit
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [ogg_audit(_qm45_make_ogg(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_ogg": [m["is_ogg"] for m in metas],
-                    "n_pages": pd.array(
-                        [m["n_pages"] for m in metas], dtype="Int32"
-                    ),
-                    "n_streams": pd.array(
-                        [m["n_streams"] for m in metas], dtype="Int32"
-                    ),
-                    "has_eos": pd.array(
-                        [m["has_eos"] for m in metas], dtype="Int32"
-                    ),
-                    "codec": [m["codec"] for m in metas],
-                    "truncated": pd.array(
-                        [m["truncated"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {"doc_id": r["doc_id"], **ogg_audit(_qm45_make_ogg(r["doc_id"]))}
 
-    return docs.mapInPandas(run, _OGG_SCHEMA)
+    return map_records(docs, run, _OGG_SCHEMA)
 
 
 QUERIES["qm45_ogg_audit"] = _qm45
@@ -3329,37 +2808,16 @@ def _qx63_make_wire(doc_id: int) -> bytes:
 def _qx63(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         import hashlib
 
         from pdf_spark.core.httpwire import dechunk
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [dechunk(_qx63_make_wire(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "ok": [m["ok"] for m in metas],
-                    "n_chunks": pd.array(
-                        [m["n_chunks"] for m in metas], dtype="Int32"
-                    ),
-                    "body_len": pd.array(
-                        [m["body_len"] for m in metas], dtype="Int64"
-                    ),
-                    "has_trailer": pd.array(
-                        [m["has_trailer"] for m in metas], dtype="Int32"
-                    ),
-                    "malformed": pd.array(
-                        [m["malformed"] for m in metas], dtype="Int32"
-                    ),
-                    "body_md5": [
-                        hashlib.md5(m["body"]).hexdigest() for m in metas
-                    ],
-                }
-            )
+        m = dechunk(_qx63_make_wire(r["doc_id"]))
+        md5 = hashlib.md5(m["body"]).hexdigest()
+        yield {"doc_id": r["doc_id"], **m, "body_md5": md5}
 
-    return docs.mapInPandas(run, _CHUNK_SCHEMA)
+    return map_records(docs, run, _CHUNK_SCHEMA)
 
 
 QUERIES["qx63_dechunk"] = _qx63
@@ -3435,36 +2893,15 @@ def _qm46_make_font(doc_id: int) -> bytes:
 def _qm46(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.woff import woff_audit
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [woff_audit(_qm46_make_font(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_woff": [m["is_woff"] for m in metas],
-                    "woff_version": pd.array(
-                        [m["woff_version"] for m in metas], dtype="Int32"
-                    ),
-                    "flavor": [m["flavor"] for m in metas],
-                    "n_tables": pd.array(
-                        [m["n_tables"] for m in metas], dtype="Int32"
-                    ),
-                    "has_metadata": pd.array(
-                        [m["has_metadata"] for m in metas], dtype="Int32"
-                    ),
-                    "length_ok": pd.array(
-                        [m["length_ok"] for m in metas], dtype="Int32"
-                    ),
-                    "truncated": pd.array(
-                        [m["truncated"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **woff_audit(_qm46_make_font(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _WOFF_SCHEMA)
+    return map_records(docs, run, _WOFF_SCHEMA)
 
 
 QUERIES["qm46_woff_audit"] = _qm46
@@ -3540,40 +2977,15 @@ def _qx64_make_page(doc_id: int) -> bytes:
 def _qx64(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.htmlaudit import spa_shell_audit
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [spa_shell_audit(_qx64_make_page(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "text_chars": pd.array(
-                        [m["text_chars"] for m in metas], dtype="Int64"
-                    ),
-                    "script_bytes": pd.array(
-                        [m["script_bytes"] for m in metas], dtype="Int64"
-                    ),
-                    "n_scripts": pd.array(
-                        [m["n_scripts"] for m in metas], dtype="Int32"
-                    ),
-                    "has_empty_root": pd.array(
-                        [m["has_empty_root"] for m in metas], dtype="Int32"
-                    ),
-                    "has_noscript": pd.array(
-                        [m["has_noscript"] for m in metas], dtype="Int32"
-                    ),
-                    "script_permille": pd.array(
-                        [m["script_permille"] for m in metas], dtype="Int64"
-                    ),
-                    "is_spa_shell": pd.array(
-                        [m["is_spa_shell"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **spa_shell_audit(_qx64_make_page(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _SPA_SCHEMA)
+    return map_records(docs, run, _SPA_SCHEMA)
 
 
 QUERIES["qx64_spa_shell"] = _qx64
@@ -3659,35 +3071,15 @@ def _qx65_make_page(doc_id: int) -> bytes:
 def _qx65(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.htmlaudit import data_uri_inventory
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [data_uri_inventory(_qx65_make_page(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_uris": pd.array(
-                        [m["n_uris"] for m in metas], dtype="Int32"
-                    ),
-                    "n_base64": pd.array(
-                        [m["n_base64"] for m in metas], dtype="Int32"
-                    ),
-                    "n_images": pd.array(
-                        [m["n_images"] for m in metas], dtype="Int32"
-                    ),
-                    "total_decoded_bytes": pd.array(
-                        [m["total_decoded_bytes"] for m in metas],
-                        dtype="Int64",
-                    ),
-                    "max_decoded": pd.array(
-                        [m["max_decoded"] for m in metas], dtype="Int64"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **data_uri_inventory(_qx65_make_page(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _DATAURI_SCHEMA)
+    return map_records(docs, run, _DATAURI_SCHEMA)
 
 
 QUERIES["qx65_data_uris"] = _qx65
@@ -3767,45 +3159,29 @@ def _qx66_make_page(doc_id: int) -> bytes:
 def _qx66(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.htmlaudit import (
             charset_detect,
             soft_redirects,
             spa_shell_audit,
         )
 
-        def route_one(i: int):
-            page = _qx66_make_page(i)
-            cs = charset_detect(page)
-            if cs["bom"] in ("utf-16le", "utf-16be"):
-                return ("transcode", "utf16_bom", cs["resolved"], None, None)
-            sr = soft_redirects(page)
-            if sr["is_doorway"]:
-                return ("discard", "doorway", cs["resolved"], 1, None)
-            spa = spa_shell_audit(page)
-            if spa["is_spa_shell"]:
-                return ("render", "spa_shell", cs["resolved"], 0, 1)
-            return ("extract", "ok", cs["resolved"], 0, 0)
+        page = _qx66_make_page(r["doc_id"])
+        cs = charset_detect(page)
+        out = {"doc_id": r["doc_id"], "resolved_charset": cs["resolved"]}
+        if cs["bom"] in ("utf-16le", "utf-16be"):
+            yield {**out, "route": "transcode", "reason": "utf16_bom"}
+        elif soft_redirects(page)["is_doorway"]:
+            yield {**out, "route": "discard", "reason": "doorway",
+                   "is_doorway": 1}
+        elif spa_shell_audit(page)["is_spa_shell"]:
+            yield {**out, "route": "render", "reason": "spa_shell",
+                   "is_doorway": 0, "is_spa_shell": 1}
+        else:
+            yield {**out, "route": "extract", "reason": "ok",
+                   "is_doorway": 0, "is_spa_shell": 0}
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            rows = [route_one(d) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "route": [r[0] for r in rows],
-                    "reason": [r[1] for r in rows],
-                    "resolved_charset": [r[2] for r in rows],
-                    "is_doorway": pd.array(
-                        [r[3] for r in rows], dtype="Int32"
-                    ),
-                    "is_spa_shell": pd.array(
-                        [r[4] for r in rows], dtype="Int32"
-                    ),
-                }
-            )
-
-    return docs.mapInPandas(run, _ROUTER_SCHEMA)
+    return map_records(docs, run, _ROUTER_SCHEMA)
 
 
 QUERIES["qx66_html_router"] = _qx66
@@ -3866,38 +3242,12 @@ def _qm47_make_mp3(doc_id: int) -> bytes:
 def _qm47(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.mp3 import mp3_audit
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [mp3_audit(_qm47_make_mp3(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_mp3": [m["is_mp3"] for m in metas],
-                    "n_frames": pd.array(
-                        [m["n_frames"] for m in metas], dtype="Int32"
-                    ),
-                    "is_vbr": pd.array(
-                        [m["is_vbr"] for m in metas], dtype="Int32"
-                    ),
-                    "bitrate_kbps": pd.array(
-                        [m["bitrate_kbps"] for m in metas], dtype="Int32"
-                    ),
-                    "samplerate": pd.array(
-                        [m["samplerate"] for m in metas], dtype="Int32"
-                    ),
-                    "duration_ms": pd.array(
-                        [m["duration_ms"] for m in metas], dtype="Int64"
-                    ),
-                    "truncated": pd.array(
-                        [m["truncated"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {"doc_id": r["doc_id"], **mp3_audit(_qm47_make_mp3(r["doc_id"]))}
 
-    return docs.mapInPandas(run, _MP3_SCHEMA)
+    return map_records(docs, run, _MP3_SCHEMA)
 
 
 QUERIES["qm47_mp3_audit"] = _qm47
@@ -3967,37 +3317,15 @@ def _qx67_make_page(doc_id: int) -> bytes:
 def _qx67(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.htmlaudit import srcset_audit
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [srcset_audit(_qx67_make_page(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_images": pd.array(
-                        [m["n_images"] for m in metas], dtype="Int32"
-                    ),
-                    "n_with_srcset": pd.array(
-                        [m["n_with_srcset"] for m in metas], dtype="Int32"
-                    ),
-                    "n_candidates": pd.array(
-                        [m["n_candidates"] for m in metas], dtype="Int32"
-                    ),
-                    "max_width": pd.array(
-                        [m["max_width"] for m in metas], dtype="Int64"
-                    ),
-                    "n_density_only": pd.array(
-                        [m["n_density_only"] for m in metas], dtype="Int32"
-                    ),
-                    "n_best_is_srcset": pd.array(
-                        [m["n_best_is_srcset"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **srcset_audit(_qx67_make_page(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _SRCSET_SCHEMA)
+    return map_records(docs, run, _SRCSET_SCHEMA)
 
 
 QUERIES["qx67_srcset_election"] = _qx67
@@ -4067,37 +3395,15 @@ def _qx68_make(doc_id: int):
 def _qx68(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.htmlaudit import pubdate_election
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [pubdate_election(*_qx68_make(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "date_meta": pd.array(
-                        [m["date_meta"] for m in metas], dtype="Int64"
-                    ),
-                    "date_time_tag": pd.array(
-                        [m["date_time_tag"] for m in metas], dtype="Int64"
-                    ),
-                    "date_url": pd.array(
-                        [m["date_url"] for m in metas], dtype="Int64"
-                    ),
-                    "elected": pd.array(
-                        [m["elected"] for m in metas], dtype="Int64"
-                    ),
-                    "n_channels": pd.array(
-                        [m["n_channels"] for m in metas], dtype="Int32"
-                    ),
-                    "disagree": pd.array(
-                        [m["disagree"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **pubdate_election(*_qx68_make(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _PUBDATE_SCHEMA)
+    return map_records(docs, run, _PUBDATE_SCHEMA)
 
 
 QUERIES["qx68_pubdate_election"] = _qx68
@@ -4166,35 +3472,12 @@ def _qm48_make_ttc(doc_id: int) -> bytes:
 def _qm48(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.fontmeta import ttc_audit
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [ttc_audit(_qm48_make_ttc(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_ttc": [m["is_ttc"] for m in metas],
-                    "n_fonts": pd.array(
-                        [m["n_fonts"] for m in metas], dtype="Int32"
-                    ),
-                    "n_valid_faces": pd.array(
-                        [m["n_valid_faces"] for m in metas], dtype="Int32"
-                    ),
-                    "n_table_records": pd.array(
-                        [m["n_table_records"] for m in metas], dtype="Int32"
-                    ),
-                    "shared_permille": pd.array(
-                        [m["shared_permille"] for m in metas], dtype="Int64"
-                    ),
-                    "truncated": pd.array(
-                        [m["truncated"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {"doc_id": r["doc_id"], **ttc_audit(_qm48_make_ttc(r["doc_id"]))}
 
-    return docs.mapInPandas(run, _TTC_SCHEMA)
+    return map_records(docs, run, _TTC_SCHEMA)
 
 
 QUERIES["qm48_ttc_audit"] = _qm48
@@ -4264,35 +3547,15 @@ def _qx69_make(doc_id: int):
 def _qx69(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.htmlaudit import third_party_audit
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [third_party_audit(*_qx69_make(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_resources": pd.array(
-                        [m["n_resources"] for m in metas], dtype="Int32"
-                    ),
-                    "n_third_party": pd.array(
-                        [m["n_third_party"] for m in metas], dtype="Int32"
-                    ),
-                    "n_hosts": pd.array(
-                        [m["n_hosts"] for m in metas], dtype="Int32"
-                    ),
-                    "n_iframes": pd.array(
-                        [m["n_iframes"] for m in metas], dtype="Int32"
-                    ),
-                    "third_party_permille": pd.array(
-                        [m["third_party_permille"] for m in metas],
-                        dtype="Int64",
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **third_party_audit(*_qx69_make(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _TPR_SCHEMA)
+    return map_records(docs, run, _TPR_SCHEMA)
 
 
 QUERIES["qx69_third_party"] = _qx69
@@ -4361,36 +3624,15 @@ def _qm49_make_svg(doc_id: int) -> bytes:
 def _qm49(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.imaging import svg_security
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [svg_security(_qm49_make_svg(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_svg": [m["is_svg"] for m in metas],
-                    "n_scripts": pd.array(
-                        [m["n_scripts"] for m in metas], dtype="Int32"
-                    ),
-                    "n_event_attrs": pd.array(
-                        [m["n_event_attrs"] for m in metas], dtype="Int32"
-                    ),
-                    "has_foreign_object": pd.array(
-                        [m["has_foreign_object"] for m in metas],
-                        dtype="Int32",
-                    ),
-                    "n_external_refs": pd.array(
-                        [m["n_external_refs"] for m in metas], dtype="Int32"
-                    ),
-                    "is_active": pd.array(
-                        [m["is_active"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **svg_security(_qm49_make_svg(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _SVGSEC_SCHEMA)
+    return map_records(docs, run, _SVGSEC_SCHEMA)
 
 
 QUERIES["qm49_svg_security"] = _qm49
@@ -4459,28 +3701,15 @@ def _qx70_make(doc_id: int):
 def _qx70(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.htmlaudit import lang_conflict_audit
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [lang_conflict_audit(*_qx70_make(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "lang_header": [m["lang_header"] for m in metas],
-                    "lang_attr": [m["lang_attr"] for m in metas],
-                    "lang_text": [m["lang_text"] for m in metas],
-                    "n_declared": pd.array(
-                        [m["n_declared"] for m in metas], dtype="Int32"
-                    ),
-                    "conflict": pd.array(
-                        [m["conflict"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **lang_conflict_audit(*_qx70_make(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _LANGC_SCHEMA)
+    return map_records(docs, run, _LANGC_SCHEMA)
 
 
 QUERIES["qx70_lang_conflict"] = _qx70
@@ -4542,32 +3771,15 @@ def _qx71_make_page(doc_id: int) -> bytes:
 def _qx71(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.htmlaudit import paywall_audit
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [paywall_audit(_qx71_make_page(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_ldjson_blocks": pd.array(
-                        [m["n_ldjson_blocks"] for m in metas], dtype="Int32"
-                    ),
-                    "has_access_flag": pd.array(
-                        [m["has_access_flag"] for m in metas], dtype="Int32"
-                    ),
-                    "is_paywalled": pd.array(
-                        [m["is_paywalled"] for m in metas], dtype="Int32"
-                    ),
-                    "has_paywall_class": pd.array(
-                        [m["has_paywall_class"] for m in metas],
-                        dtype="Int32",
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **paywall_audit(_qx71_make_page(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _PAYWALL_SCHEMA)
+    return map_records(docs, run, _PAYWALL_SCHEMA)
 
 
 QUERIES["qx71_paywall_flag"] = _qx71
@@ -4670,29 +3882,11 @@ def _qx72_eval(doc_id: int):
 def _qx72(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            rows = [_qx72_eval(d) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "fn_type": pd.array(
-                        [r[0] for r in rows], dtype="Int32"
-                    ),
-                    "n_outputs": pd.array(
-                        [r[1] for r in rows], dtype="Int32"
-                    ),
-                    "y0_micro": pd.array(
-                        [r[2] for r in rows], dtype="Int64"
-                    ),
-                    "y1_micro": pd.array(
-                        [r[3] for r in rows], dtype="Int64"
-                    ),
-                }
-            )
+    def run(r: dict) -> Iterator[dict]:
+        row = (r["doc_id"], *_qx72_eval(r["doc_id"]))
+        yield dict(zip(_PDFFUNC_SCHEMA.names, row))
 
-    return docs.mapInPandas(run, _PDFFUNC_SCHEMA)
+    return map_records(docs, run, _PDFFUNC_SCHEMA)
 
 
 QUERIES["qx72_pdf_functions"] = _qx72
@@ -4802,19 +3996,11 @@ def _qm50_eval(doc_id: int):
 def _qm50(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            rows = [_qm50_eval(d) for d in ids]
-            cols = ["src", "n_glyphs", "n_components", "n_contours",
-                    "n_points", "adv_total", "ink_w", "ink_h", "bbox_match"]
-            frame = {"doc_id": ids}
-            for j, c in enumerate(cols):
-                dtype = "Int64" if c == "adv_total" else "Int32"
-                frame[c] = pd.array([r[j] for r in rows], dtype=dtype)
-            yield pd.DataFrame(frame)
+    def run(r: dict) -> Iterator[dict]:
+        row = (r["doc_id"], *_qm50_eval(r["doc_id"]))
+        yield dict(zip(_OUTLINE_SCHEMA.names, row))
 
-    return docs.mapInPandas(run, _OUTLINE_SCHEMA)
+    return map_records(docs, run, _OUTLINE_SCHEMA)
 
 
 QUERIES["qm50_glyph_outlines"] = _qm50
@@ -4894,39 +4080,13 @@ def _qm51_make(doc_id: int) -> bytes:
 def _qm51(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.icc import icc_meta
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [icc_meta(_qm51_make(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "valid": pd.array(
-                        [m["valid"] for m in metas], dtype="Int32"
-                    ),
-                    "dev_class": [m["dev_class"] for m in metas],
-                    "color_space": [m["color_space"] for m in metas],
-                    "n_tags": pd.array(
-                        [m["n_tags"] for m in metas], dtype="Int32"
-                    ),
-                    "intent": pd.array(
-                        [m["intent"] for m in metas], dtype="Int32"
-                    ),
-                    "vmajor": pd.array(
-                        [m["version_major"] for m in metas], dtype="Int32"
-                    ),
-                    "has_a2b0": pd.array(
-                        [m["has_a2b0"] for m in metas], dtype="Int32"
-                    ),
-                    "d50_ok": pd.array(
-                        [m["d50_ok"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        m = icc_meta(_qm51_make(r["doc_id"]))
+        yield {"doc_id": r["doc_id"], **m, "vmajor": m["version_major"]}
 
-    return docs.mapInPandas(run, _ICC_SCHEMA)
+    return map_records(docs, run, _ICC_SCHEMA)
 
 
 QUERIES["qm51_icc_profile"] = _qm51
@@ -4996,28 +4156,11 @@ def _qx73_eval(doc_id: int):
 def _qx73(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            rows = [_qx73_eval(d) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "mode": pd.array([r[0] for r in rows], dtype="Int32"),
-                    "ink": pd.array([r[1] for r in rows], dtype="Int64"),
-                    "rows_touched": pd.array(
-                        [r[2] for r in rows], dtype="Int32"
-                    ),
-                    "first_row": pd.array(
-                        [r[3] for r in rows], dtype="Int32"
-                    ),
-                    "last_row": pd.array(
-                        [r[4] for r in rows], dtype="Int32"
-                    ),
-                }
-            )
+    def run(r: dict) -> Iterator[dict]:
+        row = (r["doc_id"], *_qx73_eval(r["doc_id"]))
+        yield dict(zip(_RASTER_SCHEMA.names, row))
 
-    return docs.mapInPandas(run, _RASTER_SCHEMA)
+    return map_records(docs, run, _RASTER_SCHEMA)
 
 
 QUERIES["qx73_page_raster"] = _qx73
@@ -5099,22 +4242,12 @@ def _qm52_make(doc_id: int) -> bytes:
 def _qm52(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.jp2 import jp2_meta
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [jp2_meta(_qm52_make(d)) for d in ids]
-            frame = {"doc_id": ids,
-                     "container": [m["container"] for m in metas]}
-            for c in ("valid", "w", "h", "n_comp", "n_tiles"):
-                frame[c] = pd.array([m[c] for m in metas], dtype="Int32")
-            frame["prog"] = [m["prog"] for m in metas]
-            for c in ("n_levels", "n_layers", "n_sot", "truncated"):
-                frame[c] = pd.array([m[c] for m in metas], dtype="Int32")
-            yield pd.DataFrame(frame)
+        yield {"doc_id": r["doc_id"], **jp2_meta(_qm52_make(r["doc_id"]))}
 
-    return docs.mapInPandas(run, _JP2_SCHEMA)
+    return map_records(docs, run, _JP2_SCHEMA)
 
 
 QUERIES["qm52_jp2_meta"] = _qm52
@@ -5207,21 +4340,13 @@ def _qx74_make(doc_id: int) -> bytes:
 def _qx74(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.document import revision_audit
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [revision_audit(_qx74_make(d)) for d in ids]
-            frame = {"doc_id": ids}
-            for c in ("n_sections", "n_classic", "n_streams", "has_hybrid",
-                      "n_objects", "n_shadowed"):
-                frame[c] = pd.array(
-                    [m[c] if m else None for m in metas], dtype="Int32"
-                )
-            yield pd.DataFrame(frame)
+        m = revision_audit(_qx74_make(r["doc_id"]))
+        yield {"doc_id": r["doc_id"], **(m or {})}
 
-    return docs.mapInPandas(run, _REV_SCHEMA)
+    return map_records(docs, run, _REV_SCHEMA)
 
 
 QUERIES["qx74_revision_forensics"] = _qx74
@@ -5330,19 +4455,11 @@ def _qm53_eval(doc_id: int):
 def _qm53(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            rows = [_qm53_eval(d) for d in ids]
-            frame = {"doc_id": ids}
-            cols = ["fam", "n_glyphs", "n_contours", "n_points", "adv",
-                    "ink_w", "ink_h"]
-            for j, c in enumerate(cols):
-                dtype = "Int64" if c == "adv" else "Int32"
-                frame[c] = pd.array([r[j] for r in rows], dtype=dtype)
-            yield pd.DataFrame(frame)
+    def run(r: dict) -> Iterator[dict]:
+        row = (r["doc_id"], *_qm53_eval(r["doc_id"]))
+        yield dict(zip(_T1_SCHEMA.names, row))
 
-    return docs.mapInPandas(run, _T1_SCHEMA)
+    return map_records(docs, run, _T1_SCHEMA)
 
 
 QUERIES["qm53_type1_outlines"] = _qm53

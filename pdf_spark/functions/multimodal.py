@@ -3,7 +3,7 @@
 Every decode in this tier runs a REAL pure-stdlib codec from
 ``core/imaging.py`` / ``core/audio.py`` / ``core/video.py`` (PNG, BMP,
 GIF animation, JPEG, WebP-lossless, TIFF, WAV, ...) inside the Spark
-plumbing under test: BinaryType schema, the ``mapInPandas`` batch shape
+plumbing under test: BinaryType schema, the ``map_records`` UDF
 (one Arrow batch of blobs in, one batch of feature rows out), partition
 behavior, and the metadata queries. Fixtures are synthesized
 deterministically from doc ids so a DuckDB oracle can restate every
@@ -12,7 +12,7 @@ but the bytes each executor decodes are genuine container formats.
 
 - ``qm01_binary_meta``    — JVM-side binary column ops (encode/length/
   hash), DuckDB-verified.
-- ``qm02_image_features`` — mapInPandas feature extraction over real
+- ``qm02_image_features`` — map_records feature extraction over real
   PNG/BMP blobs (dims, channels and two-tone content vary per doc).
 - ``qm03_frame_sample``   — every-3rd-frame sampling over real animated
   GIFs via the multi-frame LZW decoder.
@@ -23,9 +23,9 @@ but the bytes each executor decodes are genuine container formats.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -37,9 +37,62 @@ from pyspark.sql.types import (
 )
 
 from pdf_spark.functions.tables import load, register_views
+from pdf_spark.operators.extract import map_records
 
 QUERIES = {}
 ORACLE = {}
+
+
+@contextmanager
+def _pure_decoder():
+    """Force the pure decoder so the oracle pins OUR bit math even where a
+    PIL backend exists."""
+    from pdf_spark.core import imaging
+
+    pil, imaging._PIL = imaging._PIL, None
+    try:
+        yield
+    finally:
+        imaging._PIL = pil
+
+
+def _feature_row(doc_id: int, blob: bytes) -> dict:
+    from pdf_spark.core.imaging import image_features
+
+    w, h, ch, luma = image_features(blob)
+    return {
+        "doc_id": doc_id,
+        "width": w,
+        "height": h,
+        "n_channels": ch,
+        "mean_luma": luma,
+    }
+
+
+def _ahash_hex(blob: bytes) -> str:
+    from pdf_spark.core.imaging import average_hash
+
+    return format(average_hash(blob), "016x")
+
+
+def _route_media(blob: bytes) -> tuple[str, str]:
+    """``(modality, format)`` by magic sniff; ``("unknown", "unknown")``
+    when no image, audio or video reader claims the bytes."""
+    from pdf_spark.core.audio import audio_meta
+    from pdf_spark.core.imaging import image_meta
+    from pdf_spark.core.video import video_meta
+
+    im = image_meta(blob)
+    if im is not None:
+        return ("image", im[0])
+    au = audio_meta(blob)
+    if au["codec"] != "unknown":
+        return ("audio", au["codec"])
+    vi = video_meta(blob)
+    if vi["format"] != "unknown":
+        return ("video", vi["format"])
+    return ("unknown", "unknown")
+
 
 # -- qm01: binary metadata, pure JVM ------------------------------------------
 
@@ -70,7 +123,7 @@ ORACLE["qm01_binary_meta"] = _META_DUCK
 # Each doc synthesizes a genuine container -- PNG gray / PNG RGB / BMP
 # 32bpp rotating by residue, PNG rows under the full filter cycle --
 # with per-doc dimensions and a two-tone left/right pattern, then the
-# mapInPandas stage decodes it with the real pure-stdlib codecs and
+# map_records stage decodes it with the real pure-stdlib codecs and
 # reports post-decode features. All-equal RGB channels make the BT.601
 # integer luma equal the gray value, so the oracle restates the floor
 # mean-luma arithmetically from the construction.
@@ -111,34 +164,14 @@ def _qm02_make_blob(doc_id: int) -> bytes:
 
 
 def _qm02(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core import imaging
-
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pil, imaging._PIL = imaging._PIL, None
-        try:
-            for batch in batches:
-                out = {
-                    k: []
-                    for k in (
-                        "doc_id", "width", "height", "n_channels", "mean_luma"
-                    )
-                }
-                for doc_id in batch["doc_id"]:
-                    w, h, c, m = imaging.image_features(
-                        _qm02_make_blob(int(doc_id))
-                    )
-                    out["doc_id"].append(int(doc_id))
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["n_channels"].append(c)
-                    out["mean_luma"].append(m)
-                yield pd.DataFrame(out)
-        finally:
-            imaging._PIL = pil
+    def featurize(r: dict) -> Iterator[dict]:
+        with _pure_decoder():
+            row = _feature_row(r["doc_id"], _qm02_make_blob(r["doc_id"]))
+        yield row
 
-    return docs.mapInPandas(featurize, _FEATURES_SCHEMA)
+    return map_records(docs, featurize, _FEATURES_SCHEMA)
 
 
 QUERIES["qm02_image_features"] = _qm02
@@ -209,27 +242,21 @@ def _qm03(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def sample(r: dict) -> Iterator[dict]:
         import hashlib
 
-        for batch in batches:
-            out = {"doc_id": [], "frame_idx": [], "frame_md5": []}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                for k, (w, h, ch, s) in enumerate(
-                    imaging.gif_frames(_qm03_make_gif(i))
-                ):
-                    if k % 3:
-                        continue
-                    lum = b"".join(
-                        bytes(r) for r in imaging._luma_rows(w, h, ch, s)
-                    )
-                    out["doc_id"].append(i)
-                    out["frame_idx"].append(k)
-                    out["frame_md5"].append(hashlib.md5(lum).hexdigest())
-            yield pd.DataFrame(out)
+        gif = _qm03_make_gif(r["doc_id"])
+        for k, (w, h, ch, s) in enumerate(imaging.gif_frames(gif)):
+            if k % 3:
+                continue
+            lum = b"".join(bytes(x) for x in imaging._luma_rows(w, h, ch, s))
+            yield {
+                "doc_id": r["doc_id"],
+                "frame_idx": k,
+                "frame_md5": hashlib.md5(lum).hexdigest(),
+            }
 
-    return docs.mapInPandas(sample, _FRAMES_SCHEMA)
+    return map_records(docs, sample, _FRAMES_SCHEMA)
 
 
 QUERIES["qm03_frame_sample"] = _qm03
@@ -257,7 +284,7 @@ SELECT doc_id, frame_idx, frame_md5 FROM frames
 #
 # Genuine RIFF/WAVE containers (16-bit mono PCM, per-doc sample rate
 # and length, a deterministic integer waveform) decoded by
-# ``core/audio.py::decode_wav`` inside the mapInPandas stage; the
+# ``core/audio.py::decode_wav`` inside the map_records stage; the
 # reported features are what a corpus loudness/duration gate computes
 # post-decode. The waveform formula is pure integer arithmetic, so the
 # oracle restates duration, mean absolute amplitude and the
@@ -290,23 +317,20 @@ def _qm04(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {f.name: [] for f in _AUDIO_SCHEMA.fields}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                rate, _ch, _bits, frames, dur, _peak, mean_abs = (
-                    audio.audio_features(_qm04_make_wav(i))
-                )
-                out["doc_id"].append(i)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(frames)
-                out["duration_ms"].append(dur)
-                out["mean_amp"].append(mean_abs)
-                out["n_hops"].append(-(-frames // 160))
-            yield pd.DataFrame(out)
+    def featurize(r: dict) -> Iterator[dict]:
+        rate, _ch, _bits, frames, dur, _peak, mean_abs = audio.audio_features(
+            _qm04_make_wav(r["doc_id"])
+        )
+        yield {
+            "doc_id": r["doc_id"],
+            "sample_rate": rate,
+            "n_samples": frames,
+            "duration_ms": dur,
+            "mean_amp": mean_abs,
+            "n_hops": -(-frames // 160),
+        }
 
-    return docs.mapInPandas(featurize, _AUDIO_SCHEMA)
+    return map_records(docs, featurize, _AUDIO_SCHEMA)
 
 
 QUERIES["qm04_audio_features"] = _qm04
@@ -337,7 +361,7 @@ FROM amp
 #
 # The image-dedup stage of a multimodal corpus (LAION-style): each doc
 # renders its leading 256 codepoints into a REAL 16x16 gray PNG (pixel
-# = codepoint % 256, zero-padded), the mapInPandas stage decodes it
+# = codepoint % 256, zero-padded), the map_records stage decodes it
 # with the real PNG codec, and the 16-bit average-hash thresholds 16
 # diagonal pixels of the decoded luma plane against the image's floor
 # mean -- so similar documents produce similar images produce close
@@ -430,27 +454,14 @@ _QM05_BITS = " + ".join(
 
 
 def _qm05(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core import imaging
-
     docs = load(spark, sf, "documents").select("doc_id", "text")
 
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pil, imaging._PIL = imaging._PIL, None
-        try:
-            for batch in batches:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": [int(d) for d in batch["doc_id"]],
-                        "phash": [
-                            _qm05_ahash(_qm05_make_png(t))
-                            for t in batch["text"]
-                        ],
-                    }
-                )
-        finally:
-            imaging._PIL = pil
+    def run(r: dict) -> Iterator[dict]:
+        with _pure_decoder():
+            phash = _qm05_ahash(_qm05_make_png(r["text"]))
+        yield {"doc_id": r["doc_id"], "phash": phash}
 
-    hashes = docs.mapInPandas(hash_batches, _PHASH_SCHEMA)
+    hashes = map_records(docs, run, _PHASH_SCHEMA)
     hashes.createOrReplaceTempView("qm05_hashes")
     return spark.sql(
         _QM05_MAIN.replace("{HASHES}", "qm05_hashes")
@@ -471,7 +482,7 @@ ORACLE["qm05_phash_neardup"] = (
 # -- qm06/qm07: REAL image decode (core/imaging.py) ----------------------------
 #
 # Upgrades the multimodal tier from "deterministic stand-in" to real decode:
-# each doc synthesizes a REAL PNG (inside the same mapInPandas loop a
+# each doc synthesizes a REAL PNG (inside the same map_records UDF a
 # production job would run its decoder in), and the pure-Python PNG codec —
 # or PIL, when importable; both feed identical integer math — decodes it
 # back. The PNG content is a pure function of doc_id, so DuckDB can state
@@ -506,25 +517,12 @@ def _qm06_make_png(doc_id: int) -> bytes:
 
 
 def _qm06(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core.imaging import image_features
-
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            feats = [image_features(_qm06_make_png(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "n_channels": [f[2] for f in feats],
-                    "mean_luma": [f[3] for f in feats],
-                }
-            )
+    def run(r: dict) -> Iterator[dict]:
+        yield _feature_row(r["doc_id"], _qm06_make_png(r["doc_id"]))
 
-    return docs.mapInPandas(run, _PNG_FEATURES_SCHEMA)
+    return map_records(docs, run, _PNG_FEATURES_SCHEMA)
 
 
 QUERIES["qm06_png_decode_features"] = _qm06
@@ -565,24 +563,12 @@ def _qm07_make_png(doc_id: int) -> bytes:
 
 
 def _qm07(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core.imaging import average_hash
-
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "ahash_hex": [
-                        format(average_hash(_qm07_make_png(d)), "016x")
-                        for d in ids
-                    ],
-                }
-            )
+    def run(r: dict) -> Iterator[dict]:
+        yield {"doc_id": r["doc_id"], "ahash_hex": _ahash_hex(_qm07_make_png(r["doc_id"]))}
 
-    return docs.mapInPandas(run, _PNG_AHASH_SCHEMA)
+    return map_records(docs, run, _PNG_AHASH_SCHEMA)
 
 
 QUERIES["qm07_png_ahash"] = _qm07
@@ -621,25 +607,12 @@ def _qm08_make_gif(doc_id: int) -> bytes:
 
 
 def _qm08(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core.imaging import image_features
-
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            feats = [image_features(_qm08_make_gif(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "n_channels": [f[2] for f in feats],
-                    "mean_luma": [f[3] for f in feats],
-                }
-            )
+    def run(r: dict) -> Iterator[dict]:
+        yield _feature_row(r["doc_id"], _qm08_make_gif(r["doc_id"]))
 
-    return docs.mapInPandas(run, _PNG_FEATURES_SCHEMA)
+    return map_records(docs, run, _PNG_FEATURES_SCHEMA)
 
 
 QUERIES["qm08_gif_decode_features"] = _qm08
@@ -672,24 +645,12 @@ def _qm09_make_gif(doc_id: int) -> bytes:
 
 
 def _qm09(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core.imaging import average_hash
-
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "ahash_hex": [
-                        format(average_hash(_qm09_make_gif(d)), "016x")
-                        for d in ids
-                    ],
-                }
-            )
+    def run(r: dict) -> Iterator[dict]:
+        yield {"doc_id": r["doc_id"], "ahash_hex": _ahash_hex(_qm09_make_gif(r["doc_id"]))}
 
-    return docs.mapInPandas(run, _PNG_AHASH_SCHEMA)
+    return map_records(docs, run, _PNG_AHASH_SCHEMA)
 
 
 QUERIES["qm09_gif_ahash"] = _qm09
@@ -754,21 +715,18 @@ def _qm10(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out: dict = {c: [] for c in schema.fieldNames()}
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                meta = image_meta(_qm10_make_blob(i))
-                fmt, w, h, ch = meta if meta else ("other", None, None, None)
-                out["doc_id"].append(i)
-                out["format"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_channels"].append(ch)
-            yield pd.DataFrame(out)
+    def run(r: dict) -> Iterator[dict]:
+        meta = image_meta(_qm10_make_blob(r["doc_id"]))
+        fmt, w, h, ch = meta if meta else ("other", None, None, None)
+        yield {
+            "doc_id": r["doc_id"],
+            "format": fmt,
+            "width": w,
+            "height": h,
+            "n_channels": ch,
+        }
 
-    return docs.mapInPandas(run, schema)
+    return map_records(docs, run, schema)
 
 
 QUERIES["qm10_image_meta"] = _qm10
@@ -827,25 +785,12 @@ def _qm11_make_jpeg(doc_id: int) -> bytes:
 
 
 def _qm11(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core.imaging import image_features
-
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            feats = [image_features(_qm11_make_jpeg(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "n_channels": [f[2] for f in feats],
-                    "mean_luma": [f[3] for f in feats],
-                }
-            )
+    def run(r: dict) -> Iterator[dict]:
+        yield _feature_row(r["doc_id"], _qm11_make_jpeg(r["doc_id"]))
 
-    return docs.mapInPandas(run, _PNG_FEATURES_SCHEMA)
+    return map_records(docs, run, _PNG_FEATURES_SCHEMA)
 
 
 QUERIES["qm11_jpeg_decode_features"] = _qm11
@@ -886,24 +831,12 @@ def _qm12_make_jpeg(doc_id: int) -> bytes:
 
 
 def _qm12(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core.imaging import average_hash
-
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "ahash_hex": [
-                        format(average_hash(_qm12_make_jpeg(d)), "016x")
-                        for d in ids
-                    ],
-                }
-            )
+    def run(r: dict) -> Iterator[dict]:
+        yield {"doc_id": r["doc_id"], "ahash_hex": _ahash_hex(_qm12_make_jpeg(r["doc_id"]))}
 
-    return docs.mapInPandas(run, _PNG_AHASH_SCHEMA)
+    return map_records(docs, run, _PNG_AHASH_SCHEMA)
 
 
 QUERIES["qm12_jpeg_ahash"] = _qm12
@@ -958,29 +891,13 @@ _PALETTE_SCHEMA = StructType(
 
 
 def _qm13(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core.imaging import average_hash, image_features
-
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            blobs = [_qm13_make_png(d) for d in ids]
-            feats = [image_features(bl) for bl in blobs]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "n_channels": [f[2] for f in feats],
-                    "mean_luma": [f[3] for f in feats],
-                    "ahash_hex": [
-                        format(average_hash(bl), "016x") for bl in blobs
-                    ],
-                }
-            )
+    def run(r: dict) -> Iterator[dict]:
+        blob = _qm13_make_png(r["doc_id"])
+        yield {**_feature_row(r["doc_id"], blob), "ahash_hex": _ahash_hex(blob)}
 
-    return docs.mapInPandas(run, _PALETTE_SCHEMA)
+    return map_records(docs, run, _PALETTE_SCHEMA)
 
 
 QUERIES["qm13_png_palette_features"] = _qm13
@@ -1036,29 +953,13 @@ def _qm14_make_jpeg(doc_id: int) -> bytes:
 
 
 def _qm14(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core.imaging import average_hash, image_features
-
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            blobs = [_qm14_make_jpeg(d) for d in ids]
-            feats = [image_features(bl) for bl in blobs]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": [f[0] for f in feats],
-                    "height": [f[1] for f in feats],
-                    "n_channels": [f[2] for f in feats],
-                    "mean_luma": [f[3] for f in feats],
-                    "ahash_hex": [
-                        format(average_hash(bl), "016x") for bl in blobs
-                    ],
-                }
-            )
+    def run(r: dict) -> Iterator[dict]:
+        blob = _qm14_make_jpeg(r["doc_id"])
+        yield {**_feature_row(r["doc_id"], blob), "ahash_hex": _ahash_hex(blob)}
 
-    return docs.mapInPandas(run, _PALETTE_SCHEMA)
+    return map_records(docs, run, _PALETTE_SCHEMA)
 
 
 QUERIES["qm14_jpeg_progressive"] = _qm14
@@ -1118,36 +1019,15 @@ def _qm15_make_webp(doc_id: int) -> bytes:
 
 
 def _qm15(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core import imaging
-
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # force the pure decoder so the oracle pins OUR bit math even
-        # where a PIL backend exists
-        pil, imaging._PIL = imaging._PIL, None
-        try:
-            for batch in batches:
-                ids = [int(d) for d in batch["doc_id"]]
-                blobs = [_qm15_make_webp(d) for d in ids]
-                feats = [imaging.image_features(bl) for bl in blobs]
-                yield pd.DataFrame(
-                    {
-                        "doc_id": ids,
-                        "width": [f[0] for f in feats],
-                        "height": [f[1] for f in feats],
-                        "n_channels": [f[2] for f in feats],
-                        "mean_luma": [f[3] for f in feats],
-                        "ahash_hex": [
-                            format(imaging.average_hash(bl), "016x")
-                            for bl in blobs
-                        ],
-                    }
-                )
-        finally:
-            imaging._PIL = pil
+    def run(r: dict) -> Iterator[dict]:
+        with _pure_decoder():
+            blob = _qm15_make_webp(r["doc_id"])
+            row = {**_feature_row(r["doc_id"], blob), "ahash_hex": _ahash_hex(blob)}
+        yield row
 
-    return docs.mapInPandas(run, _PALETTE_SCHEMA)
+    return map_records(docs, run, _PALETTE_SCHEMA)
 
 
 QUERIES["qm15_webp_lossless_features"] = _qm15
@@ -1212,24 +1092,11 @@ def _qm16(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            feats = [audio_features(_qm16_make_wav(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "sample_rate": [f[0] for f in feats],
-                    "n_channels": [f[1] for f in feats],
-                    "bits": [f[2] for f in feats],
-                    "n_frames": [f[3] for f in feats],
-                    "duration_ms": [f[4] for f in feats],
-                    "peak": [f[5] for f in feats],
-                    "mean_abs": [f[6] for f in feats],
-                }
-            )
+    def run(r: dict) -> Iterator[dict]:
+        feats = audio_features(_qm16_make_wav(r["doc_id"]))
+        yield dict(zip(_WAV_SCHEMA.names, (r["doc_id"], *feats)))
 
-    return docs.mapInPandas(run, _WAV_SCHEMA)
+    return map_records(docs, run, _WAV_SCHEMA)
 
 
 QUERIES["qm16_wav_pcm_features"] = _qm16
@@ -1306,30 +1173,19 @@ def _qm17(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         import hashlib
 
-        pil, imaging._PIL = imaging._PIL, None
-        try:
-            for batch in batches:
-                ids = [int(d) for d in batch["doc_id"]]
-                digests = []
-                for i in ids:
-                    w, h, ch, s = imaging._pixels(_qm17_make_blob(i))
-                    rows = imaging._luma_rows(w, h, ch, s)
-                    digests.append(
-                        hashlib.md5(
-                            b"".join(bytes(r) for r in rows)
-                        ).hexdigest()
-                    )
-                yield pd.DataFrame(
-                    {"doc_id": ids, "luma_md5": digests,
-                     "fmt": [i % 2 for i in ids]}
-                )
-        finally:
-            imaging._PIL = pil
+        with _pure_decoder():
+            w, h, ch, s = imaging._pixels(_qm17_make_blob(r["doc_id"]))
+            lum = b"".join(bytes(x) for x in imaging._luma_rows(w, h, ch, s))
+        yield {
+            "doc_id": r["doc_id"],
+            "luma_md5": hashlib.md5(lum).hexdigest(),
+            "fmt": r["doc_id"] % 2,
+        }
 
-    lifted = docs.mapInPandas(run, schema)
+    lifted = map_records(docs, run, schema)
     win = Window.partitionBy("luma_md5")
     return lifted.select(
         "doc_id",
@@ -1395,34 +1251,15 @@ def _qm18_make_bmp(doc_id: int) -> bytes:
 
 
 def _qm18(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core import imaging
-
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pil, imaging._PIL = imaging._PIL, None
-        try:
-            for batch in batches:
-                ids = [int(d) for d in batch["doc_id"]]
-                blobs = [_qm18_make_bmp(d) for d in ids]
-                feats = [imaging.image_features(bl) for bl in blobs]
-                yield pd.DataFrame(
-                    {
-                        "doc_id": ids,
-                        "width": [f[0] for f in feats],
-                        "height": [f[1] for f in feats],
-                        "n_channels": [f[2] for f in feats],
-                        "mean_luma": [f[3] for f in feats],
-                        "ahash_hex": [
-                            format(imaging.average_hash(bl), "016x")
-                            for bl in blobs
-                        ],
-                    }
-                )
-        finally:
-            imaging._PIL = pil
+    def run(r: dict) -> Iterator[dict]:
+        with _pure_decoder():
+            blob = _qm18_make_bmp(r["doc_id"])
+            row = {**_feature_row(r["doc_id"], blob), "ahash_hex": _ahash_hex(blob)}
+        yield row
 
-    return docs.mapInPandas(run, _PALETTE_SCHEMA)
+    return map_records(docs, run, _PALETTE_SCHEMA)
 
 
 QUERIES["qm18_bmp_features"] = _qm18
@@ -1491,34 +1328,15 @@ def _qm19_make_tiff(doc_id: int) -> bytes:
 
 
 def _qm19(spark: SparkSession, sf: str) -> DataFrame:
-    from pdf_spark.core import imaging
-
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pil, imaging._PIL = imaging._PIL, None
-        try:
-            for batch in batches:
-                ids = [int(d) for d in batch["doc_id"]]
-                blobs = [_qm19_make_tiff(d) for d in ids]
-                feats = [imaging.image_features(bl) for bl in blobs]
-                yield pd.DataFrame(
-                    {
-                        "doc_id": ids,
-                        "width": [f[0] for f in feats],
-                        "height": [f[1] for f in feats],
-                        "n_channels": [f[2] for f in feats],
-                        "mean_luma": [f[3] for f in feats],
-                        "ahash_hex": [
-                            format(imaging.average_hash(bl), "016x")
-                            for bl in blobs
-                        ],
-                    }
-                )
-        finally:
-            imaging._PIL = pil
+    def run(r: dict) -> Iterator[dict]:
+        with _pure_decoder():
+            blob = _qm19_make_tiff(r["doc_id"])
+            row = {**_feature_row(r["doc_id"], blob), "ahash_hex": _ahash_hex(blob)}
+        yield row
 
-    return docs.mapInPandas(run, _PALETTE_SCHEMA)
+    return map_records(docs, run, _PALETTE_SCHEMA)
 
 
 QUERIES["qm19_tiff_features"] = _qm19
@@ -1595,25 +1413,12 @@ def _qm20_make_mp4(doc_id: int) -> bytes:
 def _qm20(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.video import mp4_meta
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [mp4_meta(_qm20_make_mp4(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "brand": [m["brand"] for m in metas],
-                    "duration_ms": [m["duration_ms"] for m in metas],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "n_video": [m["n_video"] for m in metas],
-                    "n_audio": [m["n_audio"] for m in metas],
-                }
-            )
+        yield {"doc_id": r["doc_id"], **mp4_meta(_qm20_make_mp4(r["doc_id"]))}
 
-    return docs.mapInPandas(run, _MP4_SCHEMA)
+    return map_records(docs, run, _MP4_SCHEMA)
 
 
 QUERIES["qm20_mp4_meta"] = _qm20
@@ -1688,25 +1493,15 @@ def _qm21_make_mkv(doc_id: int) -> bytes:
 def _qm21(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.video import video_meta
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [video_meta(_qm21_make_mkv(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "format": [m["format"] for m in metas],
-                    "duration_ms": [m["duration_ms"] for m in metas],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                    "n_video": [m["n_video"] for m in metas],
-                    "n_audio": [m["n_audio"] for m in metas],
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **video_meta(_qm21_make_mkv(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _MKV_SCHEMA)
+    return map_records(docs, run, _MKV_SCHEMA)
 
 
 QUERIES["qm21_mkv_meta"] = _qm21
@@ -1776,24 +1571,15 @@ def _qm22_make_audio(doc_id: int) -> bytes:
 def _qm22(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.audio import audio_meta
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [audio_meta(_qm22_make_audio(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "codec": [m["codec"] for m in metas],
-                    "channels": [m["channels"] for m in metas],
-                    "sample_rate": [m["sample_rate"] for m in metas],
-                    "bitrate_kbps": [m["bitrate_kbps"] for m in metas],
-                    "duration_ms": [m["duration_ms"] for m in metas],
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **audio_meta(_qm22_make_audio(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _AUDIO_META_SCHEMA)
+    return map_records(docs, run, _AUDIO_META_SCHEMA)
 
 
 QUERIES["qm22_audio_meta"] = _qm22
@@ -1894,35 +1680,11 @@ def _qm23_make_blob(doc_id: int) -> bytes:
 def _qm23(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.audio import audio_meta
-        from pdf_spark.core.imaging import image_meta
-        from pdf_spark.core.video import video_meta
+    def run(r: dict) -> Iterator[dict]:
+        modality, fmt = _route_media(_qm23_make_blob(r["doc_id"]))
+        yield {"doc_id": r["doc_id"], "modality": modality, "format": fmt}
 
-        def route(blob: bytes) -> tuple:
-            im = image_meta(blob)
-            if im is not None:
-                return ("image", im[0])
-            au = audio_meta(blob)
-            if au["codec"] != "unknown":
-                return ("audio", au["codec"])
-            vi = video_meta(blob)
-            if vi["format"] != "unknown":
-                return ("video", vi["format"])
-            return ("unknown", "unknown")
-
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            routed = [route(_qm23_make_blob(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "modality": [r[0] for r in routed],
-                    "format": [r[1] for r in routed],
-                }
-            )
-
-    return docs.mapInPandas(run, _ROUTER_SCHEMA)
+    return map_records(docs, run, _ROUTER_SCHEMA)
 
 
 QUERIES["qm23_media_router"] = _qm23
@@ -1996,35 +1758,15 @@ def _qm24_make_jpeg(doc_id: int) -> bytes:
 def _qm24(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.imaging import exif_meta
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [exif_meta(_qm24_make_jpeg(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "has_exif": pd.array(
-                        [m["has_exif"] for m in metas], dtype="Int32"
-                    ),
-                    "endian": [m["endian"] for m in metas],
-                    "orientation": pd.array(
-                        [m["orientation"] for m in metas], dtype="Int32"
-                    ),
-                    "make": [m["make"] for m in metas],
-                    "model": [m["model"] for m in metas],
-                    "taken_at": [m["taken_at"] for m in metas],
-                    "pix_x": pd.array(
-                        [m["pix_x"] for m in metas], dtype="Int32"
-                    ),
-                    "pix_y": pd.array(
-                        [m["pix_y"] for m in metas], dtype="Int32"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **exif_meta(_qm24_make_jpeg(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _EXIF_SCHEMA)
+    return map_records(docs, run, _EXIF_SCHEMA)
 
 
 QUERIES["qm24_exif_meta"] = _qm24
@@ -2094,24 +1836,15 @@ def _qm25_make_flac(doc_id: int) -> bytes:
 def _qm25(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.audio import flac_meta
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [flac_meta(_qm25_make_flac(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "channels": [m["channels"] for m in metas],
-                    "sample_rate": [m["sample_rate"] for m in metas],
-                    "bits_per_sample": [m["bits_per_sample"] for m in metas],
-                    "total_samples": [m["total_samples"] for m in metas],
-                    "duration_ms": [m["duration_ms"] for m in metas],
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **flac_meta(_qm25_make_flac(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _FLAC_SCHEMA)
+    return map_records(docs, run, _FLAC_SCHEMA)
 
 
 QUERIES["qm25_flac_meta"] = _qm25
@@ -2186,24 +1919,15 @@ def _qm26_make_blob(doc_id: int) -> bytes:
 def _qm26(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.imaging import animation_meta
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [animation_meta(_qm26_make_blob(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "format": [m["format"] for m in metas],
-                    "is_animated": [m["is_animated"] for m in metas],
-                    "n_frames": [m["n_frames"] for m in metas],
-                    "duration_ms": [m["duration_ms"] for m in metas],
-                    "loop_count": [m["loop_count"] for m in metas],
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **animation_meta(_qm26_make_blob(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _ANIM_SCHEMA)
+    return map_records(docs, run, _ANIM_SCHEMA)
 
 
 QUERIES["qm26_animation_meta"] = _qm26
@@ -2287,45 +2011,22 @@ def _qm27_make_jpeg(doc_id: int) -> bytes:
 def _qm27(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.imaging import exif_gps, exif_meta, strip_exif_gps
 
-        for batch in batches:
-            rows = []
-            for d in (int(x) for x in batch["doc_id"]):
-                blob = _qm27_make_jpeg(d)
-                g = exif_gps(blob)
-                stripped = strip_exif_gps(blob)
-                kept = (
-                    exif_meta(stripped)["orientation"]
-                    == exif_meta(blob)["orientation"]
-                )
-                rows.append(
-                    (
-                        d,
-                        g["has_gps"],
-                        g["lat_microdeg"],
-                        g["lon_microdeg"],
-                        exif_gps(stripped)["has_gps"],
-                        1 if kept else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": [r[0] for r in rows],
-                    "has_gps": [r[1] for r in rows],
-                    "lat_microdeg": pd.array(
-                        [r[2] for r in rows], dtype="Int64"
-                    ),
-                    "lon_microdeg": pd.array(
-                        [r[3] for r in rows], dtype="Int64"
-                    ),
-                    "gps_after_strip": [r[4] for r in rows],
-                    "orientation_kept": [r[5] for r in rows],
-                }
-            )
+        blob = _qm27_make_jpeg(r["doc_id"])
+        stripped = strip_exif_gps(blob)
+        kept = (
+            exif_meta(stripped)["orientation"] == exif_meta(blob)["orientation"]
+        )
+        yield {
+            "doc_id": r["doc_id"],
+            **exif_gps(blob),
+            "gps_after_strip": exif_gps(stripped)["has_gps"],
+            "orientation_kept": 1 if kept else 0,
+        }
 
-    return docs.mapInPandas(run, _GPS_SCHEMA)
+    return map_records(docs, run, _GPS_SCHEMA)
 
 
 QUERIES["qm27_exif_gps_strip"] = _qm27
@@ -2398,24 +2099,15 @@ def _qm28_make_mp4(doc_id: int) -> bytes:
 def _qm28(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.video import mp4_sample_table
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [mp4_sample_table(_qm28_make_mp4(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_samples": [m["n_samples"] for m in metas],
-                    "n_keyframes": [m["n_keyframes"] for m in metas],
-                    "media_duration_ms": [m["media_duration_ms"] for m in metas],
-                    "first_keyframe": [m["first_keyframe"] for m in metas],
-                    "last_keyframe": [m["last_keyframe"] for m in metas],
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **mp4_sample_table(_qm28_make_mp4(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _STBL_SCHEMA)
+    return map_records(docs, run, _STBL_SCHEMA)
 
 
 QUERIES["qm28_mp4_keyframes"] = _qm28
@@ -2493,23 +2185,15 @@ def _qm29_make_jpeg(doc_id: int) -> bytes:
 def _qm29(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.imaging import jpeg_xmp_meta
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [jpeg_xmp_meta(_qm29_make_jpeg(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "has_xmp": [m["has_xmp"] for m in metas],
-                    "creator_tool": [m["creator_tool"] for m in metas],
-                    "creator": [m["creator"] for m in metas],
-                    "is_ai_generated": [m["is_ai_generated"] for m in metas],
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **jpeg_xmp_meta(_qm29_make_jpeg(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _XMP_SCHEMA)
+    return map_records(docs, run, _XMP_SCHEMA)
 
 
 QUERIES["qm29_xmp_ai_provenance"] = _qm29
@@ -2552,24 +2236,15 @@ def _qm30_make_webp(doc_id: int) -> bytes:
 def _qm30(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.imaging import animation_meta
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [animation_meta(_qm30_make_webp(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "format": [m["format"] for m in metas],
-                    "is_animated": [m["is_animated"] for m in metas],
-                    "n_frames": [m["n_frames"] for m in metas],
-                    "duration_ms": [m["duration_ms"] for m in metas],
-                    "loop_count": [m["loop_count"] for m in metas],
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **animation_meta(_qm30_make_webp(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _ANIM_SCHEMA)
+    return map_records(docs, run, _ANIM_SCHEMA)
 
 
 QUERIES["qm30_webp_animation"] = _qm30
@@ -2629,24 +2304,12 @@ def _qm31_make_mp3(doc_id: int) -> bytes:
 def _qm31(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.audio import id3_tags
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [id3_tags(_qm31_make_mp3(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "has_id3": [m["has_id3"] for m in metas],
-                    "version": [m["version"] for m in metas],
-                    "title": [m["title"] for m in metas],
-                    "artist": [m["artist"] for m in metas],
-                    "year": [m["year"] for m in metas],
-                }
-            )
+        yield {"doc_id": r["doc_id"], **id3_tags(_qm31_make_mp3(r["doc_id"]))}
 
-    return docs.mapInPandas(run, _ID3_SCHEMA)
+    return map_records(docs, run, _ID3_SCHEMA)
 
 
 QUERIES["qm31_id3_tags"] = _qm31
@@ -2712,41 +2375,21 @@ def _qm32_make_blob(fam: str, i: int) -> bytes:
 def _qm32(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_spark.core.audio import audio_meta
-        from pdf_spark.core.imaging import image_meta
-        from pdf_spark.core.video import video_meta
+    def run(r: dict) -> Iterator[dict]:
+        d = r["doc_id"]
+        declared = _QM32_FAMS[d % 6]
+        # every third doc's bytes are actually a DIFFERENT family
+        actual = _QM32_FAMS[(d + 2) % 6] if d % 3 == 0 else declared
+        modality, fmt = _route_media(_qm32_make_blob(actual, d))
+        sniffed = "bin" if modality == "unknown" else fmt
+        yield {
+            "doc_id": d,
+            "declared": declared,
+            "sniffed": sniffed,
+            "mismatch": int(sniffed != declared),
+        }
 
-        def sniff(blob: bytes) -> str:
-            im = image_meta(blob)
-            if im is not None:
-                return im[0]
-            au = audio_meta(blob)
-            if au["codec"] != "unknown":
-                return au["codec"]
-            vi = video_meta(blob)
-            if vi["format"] != "unknown":
-                return vi["format"]
-            return "bin"
-
-        for batch in batches:
-            rows = []
-            for d in (int(x) for x in batch["doc_id"]):
-                declared = _QM32_FAMS[d % 6]
-                # every third doc's bytes are actually a DIFFERENT family
-                actual = _QM32_FAMS[(d + 2) % 6] if d % 3 == 0 else declared
-                sn = sniff(_qm32_make_blob(actual, d))
-                rows.append((d, declared, sn, int(sn != declared)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": [r[0] for r in rows],
-                    "declared": [r[1] for r in rows],
-                    "sniffed": [r[2] for r in rows],
-                    "mismatch": [r[3] for r in rows],
-                }
-            )
-
-    return docs.mapInPandas(run, _MISMATCH_SCHEMA)
+    return map_records(docs, run, _MISMATCH_SCHEMA)
 
 
 QUERIES["qm32_mime_mismatch"] = _qm32
@@ -2816,23 +2459,15 @@ def _qm33_make_png(doc_id: int) -> bytes:
 def _qm33(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.imaging import png_text_meta
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [png_text_meta(_qm33_make_png(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "has_text": [m["has_text"] for m in metas],
-                    "software": [m["software"] for m in metas],
-                    "n_text_chunks": [m["n_text_chunks"] for m in metas],
-                    "is_ai_suspect": [m["is_ai_suspect"] for m in metas],
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **png_text_meta(_qm33_make_png(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _PNGTEXT_SCHEMA)
+    return map_records(docs, run, _PNGTEXT_SCHEMA)
 
 
 QUERIES["qm33_png_text_provenance"] = _qm33
@@ -2907,35 +2542,12 @@ def _qm34_make_svg(doc_id: int) -> bytes:
 def _qm34(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.imaging import svg_meta
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [svg_meta(_qm34_make_svg(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_svg": [m["is_svg"] for m in metas],
-                    "width": pd.array(
-                        [m["width"] for m in metas], dtype="Int64"
-                    ),
-                    "height": pd.array(
-                        [m["height"] for m in metas], dtype="Int64"
-                    ),
-                    "has_script": pd.array(
-                        [m["has_script"] for m in metas], dtype="Int32"
-                    ),
-                    "n_images": pd.array(
-                        [m["n_images"] for m in metas], dtype="Int64"
-                    ),
-                    "n_data_uri": pd.array(
-                        [m["n_data_uri"] for m in metas], dtype="Int64"
-                    ),
-                }
-            )
+        yield {"doc_id": r["doc_id"], **svg_meta(_qm34_make_svg(r["doc_id"]))}
 
-    return docs.mapInPandas(run, _SVG_SCHEMA)
+    return map_records(docs, run, _SVG_SCHEMA)
 
 
 QUERIES["qm34_svg_meta"] = _qm34
@@ -3006,36 +2618,17 @@ def _qm35_make_blob(doc_id: int) -> bytes:
 def _qm35(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.video import heif_meta
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            rows = []
-            for d in ids:
-                try:
-                    m = heif_meta(_qm35_make_blob(d))
-                    rows.append(
-                        (1, m["brand"], m["width"], m["height"],
-                         m["n_items"], m["is_animated"])
-                    )
-                except ValueError:
-                    rows.append((0, None, None, None, None, None))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "is_heif": [r[0] for r in rows],
-                    "brand": [r[1] for r in rows],
-                    "width": pd.array([r[2] for r in rows], dtype="Int64"),
-                    "height": pd.array([r[3] for r in rows], dtype="Int64"),
-                    "n_items": pd.array([r[4] for r in rows], dtype="Int64"),
-                    "is_animated": pd.array(
-                        [r[5] for r in rows], dtype="Int32"
-                    ),
-                }
-            )
+        try:
+            m = heif_meta(_qm35_make_blob(r["doc_id"]))
+        except ValueError:
+            yield {"doc_id": r["doc_id"], "is_heif": 0}
+            return
+        yield {"doc_id": r["doc_id"], **m, "is_heif": 1}
 
-    return docs.mapInPandas(run, _HEIF_SCHEMA)
+    return map_records(docs, run, _HEIF_SCHEMA)
 
 
 QUERIES["qm35_heif_meta"] = _qm35
@@ -3134,35 +2727,15 @@ def _qm36_make_blob(doc_id: int) -> bytes:
 def _qm36(spark: SparkSession, sf: str) -> DataFrame:
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(r: dict) -> Iterator[dict]:
         from pdf_spark.core.subtitles import subtitle_meta
 
-        for batch in batches:
-            ids = [int(d) for d in batch["doc_id"]]
-            metas = [subtitle_meta(_qm36_make_blob(d)) for d in ids]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "fmt": [m["fmt"] for m in metas],
-                    "n_cues": pd.array(
-                        [m["n_cues"] for m in metas], dtype="Int64"
-                    ),
-                    "speech_ms": pd.array(
-                        [m["speech_ms"] for m in metas], dtype="Int64"
-                    ),
-                    "span_ms": pd.array(
-                        [m["span_ms"] for m in metas], dtype="Int64"
-                    ),
-                    "n_chars": pd.array(
-                        [m["n_chars"] for m in metas], dtype="Int64"
-                    ),
-                    "density_milli": pd.array(
-                        [m["density_milli"] for m in metas], dtype="Int64"
-                    ),
-                }
-            )
+        yield {
+            "doc_id": r["doc_id"],
+            **subtitle_meta(_qm36_make_blob(r["doc_id"])),
+        }
 
-    return docs.mapInPandas(run, _SUB_SCHEMA)
+    return map_records(docs, run, _SUB_SCHEMA)
 
 
 QUERIES["qm36_subtitle_cues"] = _qm36

@@ -1345,6 +1345,7 @@ def _qr38(spark: SparkSession, sf: str) -> DataFrame:
         ]
     )
 
+    # not map_records: the rank depends on row position within the partition
     def add_rank(it):
         from pyspark import TaskContext
 

@@ -837,6 +837,7 @@ def _nfc_udf():
     import pandas as pd  # noqa: F401
     from pyspark.sql import functions as F
 
+    # not map_records: a scalar Series -> Series UDF inside a projection
     @F.pandas_udf("string")
     def nfc(s):
         import unicodedata

@@ -16,7 +16,7 @@ every corpus.
 Two entry points:
 - ``rows_for_texts``  — pure pandas/python (used inside Spark UDFs and tests)
 - ``pages_from_documents`` — Spark DataFrame: documents table -> pages table
-  via mapInPandas (the scale path: generation itself is distributed).
+  via ``map_records`` (the scale path: generation itself is distributed).
 """
 
 from __future__ import annotations
@@ -102,10 +102,10 @@ def expected_error_col(url_col):
 
 def pages_from_documents(documents_df, id_col: str = "doc_id", text_col: str = "text"):
     """Distributed corpus generation: ``documents(doc_id, text, ...)`` ->
-    ``pages`` via mapInPandas (one Arrow batch of texts -> one batch of
+    ``pages`` via ``map_records`` (one Arrow batch of texts -> one batch of
     PDFs). The document id seeds the variant choice, so the corpus is
-    deterministic regardless of partitioning."""
-    import pandas as pd
+    deterministic regardless of partitioning. ``warc_ts`` is naive and
+    lands as UTC, the session time zone ``spark_session`` pins."""
     from pyspark.sql.types import (
         BinaryType,
         StringType,
@@ -124,12 +124,9 @@ def pages_from_documents(documents_df, id_col: str = "doc_id", text_col: str = "
         ]
     )
 
-    def gen_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            rows = [
-                make_row(int(i), t if isinstance(t, str) else "")
-                for i, t in zip(pdf_batch[id_col], pdf_batch[text_col])
-            ]
-            yield pd.DataFrame(rows)
+    from pdf_spark.operators.extract import map_records
 
-    return documents_df.select(id_col, text_col).mapInPandas(gen_batches, schema)
+    def gen(r: dict) -> Iterator[dict]:
+        yield make_row(r[id_col], r[text_col] or "")
+
+    return map_records(documents_df.select(id_col, text_col), gen, schema)

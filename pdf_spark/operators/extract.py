@@ -1,7 +1,9 @@
 """The mapInArrow extraction stage (SURVEY.md §2.5, §3 EP1).
 
-Two shapes, both batched Arrow UDFs with zero per-row Python at the Spark
-level (``input_hint`` mandate):
+``map_records(df, fn, schema)`` is the one row-mapping idiom every query
+module uses (Arrow batch in, Arrow batch out). Two extraction shapes sit on
+top, both with zero per-row Python at the Spark level (``input_hint``
+mandate):
 
 - ``extract_docs_text(df)`` — the FUSED fast path: one row in -> one row
   out ``(url, text, status, error_code, n_pages, n_spans)``. The span sort
@@ -23,6 +25,8 @@ is configured at session level; each document is additionally size-capped
 """
 
 from __future__ import annotations
+
+from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -69,6 +73,30 @@ SPANS_SCHEMA = StructType(
 )
 
 
+def map_records(
+    df: DataFrame, fn: Callable[[dict], Iterable[dict]], schema: StructType
+) -> DataFrame:
+    """The one row-mapping UDF idiom: ``fn(row)`` yields zero or more output
+    dicts per input row, packed into one Arrow batch per input batch.
+
+    Keys outside ``schema`` are ignored and missing keys become NULL; Arrow
+    carries the nulls, so ``fn`` returns plain Python values. Unlike
+    ``mapInPandas``, a float NaN stays NaN (map it to ``None`` for NULL) and
+    a bool into an integer column raises.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+
+    def run(batches):
+        for batch in batches:
+            rows = [out for row in batch.to_pylist() for out in fn(row)]
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+
+    return df.mapInArrow(run, schema)
+
+
 def extract_docs_text(
     pages: DataFrame,
     max_bytes: int = DEFAULT_MAX_BYTES,
@@ -86,6 +114,9 @@ def extract_docs_text(
     (uniform size) degrade to plain paragraphs here — the
     structure-preserving HTML serializer stays ``extract_markdown``
     (qx24's path), which needs block kinds the span schema drops.
+
+    Hand-written rather than ``map_records``: this is the hot path, and
+    url/passthrough columns are forwarded as Arrow arrays with zero copies.
 
     Implemented over ``mapInArrow`` rather than ``mapInPandas``: the UDF
     consumes the html bytes row-at-a-time anyway, so the pandas block
@@ -162,75 +193,20 @@ def extract_spans(pages: DataFrame, max_bytes: int = DEFAULT_MAX_BYTES) -> DataF
     counts reconcile (FIXTURES.md §7: docs_text.status derives from it).
     """
 
-    def run(batches):
-        import pyarrow as pa
+    def run(row: dict) -> Iterator[dict]:
+        r = extract_document(row["html"], max_bytes)
+        for s in r.spans:
+            yield {
+                "url": row["url"], "page": s.page, "col": s.col, "y": s.y,
+                "x": s.x, "glyph_order": s.glyph_order, "text": s.text,
+                "font": s.font, "size": s.size, "status": "ok",
+                "error_code": "",
+            }
+        if not r.ok or not r.spans:
+            yield {
+                "url": row["url"], "page": -1, "col": 0, "y": 0.0, "x": 0.0,
+                "glyph_order": 0, "text": "" if r.ok else None, "size": 0.0,
+                "status": r.status, "error_code": r.error_code,
+            }
 
-        out_schema = pa.schema(
-            [
-                pa.field("url", pa.string()),
-                pa.field("page", pa.int32()),
-                pa.field("col", pa.int32()),
-                pa.field("y", pa.float64()),
-                pa.field("x", pa.float64()),
-                pa.field("glyph_order", pa.int64()),
-                pa.field("text", pa.string()),
-                pa.field("font", pa.string()),
-                pa.field("size", pa.float64()),
-                pa.field("status", pa.string()),
-                pa.field("error_code", pa.string()),
-            ]
-        )
-        for batch in batches:
-            names = batch.schema.names
-            rows: dict[str, list] = {f.name: [] for f in SPANS_SCHEMA.fields}
-            for url, data in zip(
-                batch.column(names.index("url")).to_pylist(),
-                batch.column(names.index("html")),
-            ):
-                r = extract_document(data.as_py(), max_bytes)
-                if not r.ok:
-                    rows["url"].append(url)
-                    rows["page"].append(-1)
-                    rows["col"].append(0)
-                    rows["y"].append(0.0)
-                    rows["x"].append(0.0)
-                    rows["glyph_order"].append(0)
-                    rows["text"].append(None)
-                    rows["font"].append(None)
-                    rows["size"].append(0.0)
-                    rows["status"].append("error")
-                    rows["error_code"].append(r.error_code)
-                    continue
-                for s in r.spans:
-                    rows["url"].append(url)
-                    rows["page"].append(s.page)
-                    rows["col"].append(s.col)
-                    rows["y"].append(s.y)
-                    rows["x"].append(s.x)
-                    rows["glyph_order"].append(s.glyph_order)
-                    rows["text"].append(s.text)
-                    rows["font"].append(s.font)
-                    rows["size"].append(s.size)
-                    rows["status"].append("ok")
-                    rows["error_code"].append("")
-                if not r.spans:
-                    rows["url"].append(url)
-                    rows["page"].append(-1)
-                    rows["col"].append(0)
-                    rows["y"].append(0.0)
-                    rows["x"].append(0.0)
-                    rows["glyph_order"].append(0)
-                    rows["text"].append("")
-                    rows["font"].append(None)
-                    rows["size"].append(0.0)
-                    rows["status"].append("ok")
-                    rows["error_code"].append("")
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(rows[f.name], out_schema.field(i).type)
-                    for i, f in enumerate(SPANS_SCHEMA.fields)
-                ],
-                schema=out_schema,
-            )
-
-    return pages.select("url", "html").mapInArrow(run, SPANS_SCHEMA)
+    return map_records(pages.select("url", "html"), run, SPANS_SCHEMA)

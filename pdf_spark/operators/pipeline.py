@@ -4,7 +4,7 @@ Composition (SURVEY.md §2.5):
 
     scan (column-pruned: url, html)
       -> [optional] salted repartition (skew)
-      -> mapInPandas extract (fused)        # narrow, no shuffle
+      -> mapInArrow extract (fused)         # narrow, no shuffle
       -> append parquet sink (docs_text/run_id=...)
       -> lineage aggregation over this run's partition only
          -> parquet append (lineage)

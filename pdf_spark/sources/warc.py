@@ -236,8 +236,6 @@ def http_payload(
 
 # --- Spark source ---------------------------------------------------------------
 
-_PAGES_FIELDS = ("url", "warc_ts", "html", "http_status", "mime")
-
 
 def records_to_rows(
     buf: bytes, max_record_bytes: int = DEFAULT_MAX_RECORD
@@ -275,25 +273,17 @@ def _raw_schema():
 
 def _flatten(files, max_record_bytes: int):
     """content-column DataFrame (batch or streaming) -> pages columns."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    def parse(batches):
-        for batch in batches:
-            rows = {k: [] for k in ("url", "warc_date", "html",
-                                    "http_status", "mime")}
-            for content in batch["content"]:
-                for url, date, payload, status, mime in records_to_rows(
-                    bytes(content), max_record_bytes
-                ):
-                    rows["url"].append(url)
-                    rows["warc_date"].append(date)
-                    rows["html"].append(payload)
-                    rows["http_status"].append(status)
-                    rows["mime"].append(mime)
-            yield pd.DataFrame(rows)
+    from pdf_spark.operators.extract import map_records
 
-    out = files.mapInPandas(parse, _raw_schema())
+    schema = _raw_schema()
+
+    def parse(r: dict) -> Iterator[dict]:
+        for row in records_to_rows(r["content"], max_record_bytes):
+            yield dict(zip(schema.names, row))
+
+    out = map_records(files, parse, schema)
     return out.select(
         "url",
         F.to_timestamp("warc_date").alias("warc_ts"),

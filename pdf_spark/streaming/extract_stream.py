@@ -171,6 +171,7 @@ def stream_lang_running_stats(spark: SparkSession, pages_dir: str) -> DataFrame:
             {"lang": [key[0]], "n_docs": [n_docs], "total_bytes": [total_bytes]}
         )
 
+    # not map_records: stateful across micro-batches
     return stream.groupBy("lang").applyInPandasWithState(
         update,
         outputStructType="lang string, n_docs long, total_bytes long",
@@ -278,6 +279,7 @@ def stream_neardup_minhash(
         state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + horizon_ms)
         yield pd.DataFrame(out)
 
+    # not map_records: stateful across micro-batches
     return stream.groupBy("band").applyInPandasWithState(
         update,
         outputStructType=(
@@ -473,6 +475,7 @@ def stream_host_budget(
             used += n
         state.update((used,))
 
+    # not map_records: stateful across micro-batches
     return stream.groupBy("host").applyInPandasWithState(
         admit,
         outputStructType="host string, url string, budget_rank long",

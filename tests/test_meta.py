@@ -792,6 +792,24 @@ def test_internal_links_dest_goto_named_broken():
     ]
 
 
+def test_internal_links_bytearray_tree_key(monkeypatch):
+    # a name-tree key handed over as a (mutable, unhashable) bytearray
+    # must still register its named destination
+    from pdf_spark.core import meta
+
+    walk = meta.walk_name_tree
+
+    def walk_bytearray_keys(resolver, root_ref, visit, *args, **kwargs):
+        def visit_bytearray(key, value_ref):
+            visit(None if key is None else bytearray(key), value_ref)
+
+        walk(resolver, root_ref, visit_bytearray, *args, **kwargs)
+
+    monkeypatch.setattr(meta, "walk_name_tree", walk_bytearray_keys)
+    got = meta.extract_internal_links(Resolver(_doc_with_internal_links()))
+    assert (0, "GoTo", "sec.two", 1, "Fit") in got
+
+
 def test_internal_links_legacy_dests_dict():
     from pdf_spark.core.meta import extract_internal_links
 

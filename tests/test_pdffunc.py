@@ -93,6 +93,28 @@ class TestCalculator:
         with pytest.raises(PdfError):
             run_ps("{ true 1 and }")      # mixed and
 
+    @pytest.mark.parametrize("src", ["{ -2 0.5 exp }", "{ 0 -1 exp }"])
+    def test_exp_domain_is_typed_error(self, src):
+        # complex result / zero to a negative power
+        with pytest.raises(PdfError):
+            run_ps(src)
+
+    def test_bitshift_magnitude_bounded(self):
+        with pytest.raises(PdfError):
+            run_ps("{ 1 1000000000 bitshift }")
+        with pytest.raises(PdfError):
+            run_ps("{ 1 -1000000000 bitshift }")
+
+    def test_integer_growth_bounded(self):
+        # squaring 3 twelve times would be a 6500-bit integer
+        with pytest.raises(PdfError):
+            run_ps("{ 3" + " dup mul" * 12 + " }")
+        with pytest.raises(PdfError):
+            run_ps("{ add }", 2**64, 2**64)
+        with pytest.raises(PdfError):
+            run_ps("{ sub }", -(2**64), 2**64)
+        assert run_ps("{ mul }", 2**31, 2**31) == [2**62]
+
 
 class TestType2:
     def test_linear(self):
@@ -120,6 +142,23 @@ class TestType2:
             encode_function({"FunctionType": 2, "Domain": [0, 1], "N": 1})
         )
         assert eval_function(fn, [0.75]) == [0.75]  # C0=[0], C1=[1]
+
+    def test_zero_to_negative_power_is_typed_error(self):
+        fn = parse_function_bytes(
+            encode_function({"FunctionType": 2, "Domain": [0, 1], "N": -1})
+        )
+        with pytest.raises(PdfError):
+            eval_function(fn, [0])
+
+    @pytest.mark.parametrize("extra", [{}, {"Range": [0, 1]}])
+    def test_negative_base_fractional_power_is_typed_error(self, extra):
+        fn = parse_function_bytes(
+            encode_function(
+                {"FunctionType": 2, "Domain": [-1, 1], "N": 0.5, **extra}
+            )
+        )
+        with pytest.raises(PdfError):
+            eval_function(fn, [-0.25])
 
 
 class TestType3:

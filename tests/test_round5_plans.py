@@ -73,7 +73,7 @@ def test_session8_new_queries_shuffle_free(spark, sf_dir):
     ):
         plan = _plan(spark, q[name](spark, sf_dir))
         assert "Exchange" not in plan, f"{name} must stay shuffle-free"
-        assert "mapInPandas" in plan or "MapInPandas" in plan, name
+        assert "MapInArrow" in plan, name
         # column-pruned scan: only doc_id leaves parquet
         assert "ReadSchema: struct<doc_id:bigint>" in plan, name
 

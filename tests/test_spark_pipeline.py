@@ -331,3 +331,126 @@ def test_extract_markdown_column(spark):
             l[3:] if l.startswith("## ") else l for l in r["md"].split("\n")
         )
         assert stripped == r["text"]
+
+
+# --- map_records: the one row-mapping UDF idiom ------------------------------
+
+def _records_schema(*fields):
+    from pyspark.sql import types as T
+
+    return T.StructType([T.StructField(n, t) for n, t in fields])
+
+
+def test_map_records_zero_one_many_rows_per_input(spark):
+    from pyspark.sql import types as T
+
+    from pdf_spark.operators.extract import map_records
+
+    def fan_out(r):
+        for k in range(r["id"] % 4):  # 0, 1, 2 or 3 rows
+            yield {"id": r["id"], "k": k}
+
+    schema = _records_schema(("id", T.LongType()), ("k", T.IntegerType()))
+    out = map_records(spark.range(8), fan_out, schema)
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == [(i, k) for i in range(8) for k in range(i % 4)]
+
+
+def test_map_records_empty_partitions_and_input(spark):
+    from pyspark.sql import types as T
+
+    from pdf_spark.operators.extract import map_records
+
+    def one(r):
+        yield {"id": r["id"]}
+
+    schema = _records_schema(("id", T.LongType()))
+    sparse = spark.range(0, 3, 1, numPartitions=8)  # 5 empty partitions
+    got = map_records(sparse, one, schema).collect()
+    assert sorted(r["id"] for r in got) == [0, 1, 2]
+    empty = spark.range(0).where(F.col("id") > 0)
+    assert map_records(empty, one, schema).collect() == []
+
+
+def test_map_records_nulls_in_every_output_type(spark):
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from pdf_spark.operators.extract import map_records
+
+    schema = _records_schema(
+        ("id", T.LongType()),
+        ("i32", T.IntegerType()),
+        ("s", T.StringType()),
+        ("b", T.BooleanType()),
+        ("raw", T.BinaryType()),
+        ("x", T.DoubleType()),
+        ("ts", T.TimestampType()),
+    )
+    full = {
+        "i32": 7, "s": "seven", "b": True, "raw": b"\x00\x07", "x": 0.5,
+        "ts": dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc),
+    }
+
+    def run(r):
+        # odd ids fill every column; even ids leave all but id missing or None
+        if r["id"] % 2:
+            yield {"id": r["id"], **full}
+        else:
+            yield {"id": r["id"], "i32": None, "s": None}
+
+    rows = {r["id"]: r for r in map_records(spark.range(4), run, schema).collect()}
+    for i in (0, 2):
+        assert all(rows[i][c] is None for c in schema.names[1:])
+    for i in (1, 3):
+        got = rows[i].asDict()
+        assert got["raw"] == bytearray(b"\x00\x07")
+        assert got["ts"] is not None
+        assert [got[c] for c in ("i32", "s", "b", "x")] == [7, "seven", True, 0.5]
+
+
+def test_map_records_ignores_extra_keys(spark):
+    from pyspark.sql import types as T
+
+    from pdf_spark.operators.extract import map_records
+
+    def run(r):
+        yield {"id": r["id"], "not_in_schema": "dropped"}
+
+    out = map_records(spark.range(3), run, _records_schema(("id", T.LongType())))
+    assert out.columns == ["id"]
+    assert sorted(r["id"] for r in out.collect()) == [0, 1, 2]
+
+
+def test_map_records_bool_into_integer_raises(spark):
+    from pyspark.sql import types as T
+
+    from pdf_spark.operators.extract import map_records
+
+    def run(r):
+        yield {"n": r["id"] > 0}
+
+    out = map_records(spark.range(2), run, _records_schema(("n", T.IntegerType())))
+    with pytest.raises(Exception, match="got bool"):
+        out.collect()
+
+
+def test_query_modules_use_one_udf_idiom():
+    """The query matrix maps rows through ``map_records`` only: no pandas
+    batch loops or nullable-dtype shims come back."""
+    import pathlib
+
+    import pdf_spark
+
+    root = pathlib.Path(pdf_spark.__file__).parent
+    for rel in (
+        "functions/docformats.py",
+        "functions/multimodal.py",
+        "functions/extraction_queries.py",
+        "gen/corpus.py",
+        "sources/warc.py",
+    ):
+        src = (root / rel).read_text()
+        for banned in ("mapInPandas(", "pd.array(", "pd.DataFrame("):
+            assert banned not in src, f"{rel} uses {banned}"
